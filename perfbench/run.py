@@ -18,8 +18,8 @@ settings.
 The last stdout line is the result, ``{"correct", "attempted",
 "failed", "metrics"}``: with ``--trace 0`` the end-to-end metrics, with
 ``--trace 1`` the per-layer ones. The line before it carries the
-workload's own end-to-end figures (build and incremental times, write
-amplification, per-query median and tail with its percentile and
+workload's own end-to-end figures (wall and stolen time of a pass,
+build and incremental times, write amplification, per-query median and tail with its percentile and
 sample count, JVM peak RSS, failed_ops) and the run context. The full record of the
 run goes to ``perfbench/_work/results/``. Exit code 0 when a result
 was printed; 2 when the package is missing; 1 on any other failure.
@@ -63,7 +63,7 @@ SESSION_ENV = (
     "SPARK_GRAFT_PLAN_DIR",
 )
 
-E2E_UNITS = {"setup_s": "s", "pass_s": "s"}
+E2E_UNITS = {"setup_s": "s", "pass_cpu_s": "s"}
 
 
 def per_layer_names() -> list[str]:
@@ -229,9 +229,12 @@ def e2e_metrics(workload: str, rec: dict[str, Any], setup_s: float) -> tuple[dic
     calls = [lat for p in passes for _, lat in p["calls"]]
     listed = {
         "setup_s": setup_s,
-        "pass_s": tracing.median([p["wall"] for p in passes]),
+        "pass_cpu_s": tracing.median([p["cpu_s"] for p in passes]),
     }
-    own: dict[str, dict[str, Any]] = {}
+    own: dict[str, dict[str, Any]] = {
+        "pass_s": {"value": tracing.median([p["wall"] for p in passes]), "unit": "s"},
+        "pass_steal_s": {"value": tracing.median([p["steal_s"] for p in passes]), "unit": "s"},
+    }
     if workload == "elt_build":
         by = {"build_s": "run_pipeline", "incremental_s": "run_incremental_pipeline"}
         for metric, call in by.items():

@@ -129,6 +129,8 @@ def test_smoke_run_passes_its_output_checks(workload, trace):
     b = _benchmark()
     listed = b["per_layer" if trace == "1" else "end_to_end"]
     assert list(result["metrics"]) == [m["name"] for m in listed]
+    if trace == "0":
+        assert all(m["value"] > 0 for m in result["metrics"].values()), result
     if trace == "1":
         m = {k: v["value"] for k, v in result["metrics"].items()}
         elt = workload == "elt_build"

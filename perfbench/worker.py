@@ -40,6 +40,40 @@ def _vm_hwm_mb(pid: int) -> float:
     raise RuntimeError(f"no VmHWM for pid {pid}")
 
 
+def _session_cpu_s() -> float:
+    """CPU seconds (user + system) used so far by every process of this
+    session: the worker, the JVM it starts and their children."""
+    sid = os.getsid(0)
+    ticks = 0
+    for pid in os.listdir("/proc"):
+        if not pid.isdigit():
+            continue
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                stat = f.read()
+        except OSError:
+            continue
+        fields = stat[stat.rindex(")") + 2 :].split()
+        if int(fields[3]) == sid:  # utime, stime, cutime, cstime
+            ticks += sum(int(x) for x in fields[11:15])
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
+def _steal_s() -> float:
+    """Seconds the hypervisor has kept this VM's vCPUs from running
+    (summed over vCPUs; 0 on bare metal)."""
+    with open("/proc/stat") as f:
+        return int(f.readline().split()[8]) / os.sysconf("SC_CLK_TCK")
+
+
+def _measured_pass(wl: Any, ctx: workloads.Ctx, pass_no: int) -> workloads.PassResult:
+    cpu, steal = _session_cpu_s(), _steal_s()
+    p = wl.run_pass(ctx, pass_no)
+    p.extra["cpu_s"] = _session_cpu_s() - cpu
+    p.extra["steal_s"] = _steal_s() - steal
+    return p
+
+
 def _pass_record(p: workloads.PassResult) -> dict[str, Any]:
     extra = {k: v for k, v in p.extra.items() if k != "out_dir"}
     return {"wall": p.wall, "calls": p.calls, "failed": p.failed, "errors": p.errors, **extra}
@@ -93,14 +127,13 @@ def run(cfg: dict[str, Any], rec: dict[str, Any]) -> None:
             passes.append(wl.run_pass(ctx, 1))
         rec["trace"]["untraced_pass_s"] = passes[1].wall if len(passes) > 1 else None
     else:
-        t_timed = time.perf_counter()
         while True:
-            passes.append(wl.run_pass(ctx, len(passes)))
+            passes.append(_measured_pass(wl, ctx, len(passes)))
             if len(passes) == 1:
                 wl.check_pass(ctx, passes[0])
             if cfg["scale"] == "smoke":
                 break
-            measured = time.perf_counter() - t_timed
+            measured = sum(p.wall for p in passes)
             if measured >= cfg["seconds"] and len(passes) >= wl.min_passes:
                 break
             if not time_for(max(p.wall for p in passes)):

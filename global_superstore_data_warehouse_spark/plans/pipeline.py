@@ -6,14 +6,20 @@ Mirrors the reference's strict ordering (`bl_cl_load()` →
 bl_cl.sql:292,1382,2184,2257-2261): dims build before the fact so FK
 lookups resolve; views materialize last. Each `.write` is an action
 boundary — the Spark analogue of the reference's per-procedure
-transactions.
+transactions. Each step costs one Spark job per artifact written
+(plus the staging guards): the rowcount it returns and audits is the
+write's own observed metric (``staging.write_counted``), and its audit
+row is driver-side metadata (``audit.log_step``), like the load-id
+file — neither re-reads nor writes through Spark.
 
 Physical layout decisions (100 TB-oriented):
 - staged sources partitioned by load_id (incremental appends prune);
 - the fact written `partitionBy("order_year")` — the reference's
   yearly range partitions (C6, bl_cl.sql:1147-1187) become directory
   partitions with dynamic partition pruning on read;
-- materialized views recomputed + overwritten (S7 semantics).
+- materialized views recomputed + overwritten (S7 semantics);
+- incremental fact loads use dynamic partition overwrite as an option
+  of that one writer, never as a session setting.
 """
 
 from __future__ import annotations
@@ -29,6 +35,7 @@ from global_superstore_data_warehouse_spark.sources.audit import log_step
 from global_superstore_data_warehouse_spark.sources.staging import (
     LoadIdSequencer,
     stage_append,
+    write_counted,
 )
 
 STAGED_TABLES = ("orders", "lineitem", "customer", "supplier", "part", "nation", "region")
@@ -50,11 +57,12 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, in
     # --- E2: 3NF build (dims in dependency order, then fact) ---
     def write_table(df: DataFrame, name: str, partition_by: str | None = None) -> int:
         path = os.path.join(out_dir, name)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(partition_by)
-        w.parquet(path)
-        n = spark.read.parquet(path).count()
+        n = write_counted(
+            df,
+            lambda w: (w.partitionBy(partition_by) if partition_by else w)
+            .mode("overwrite")
+            .parquet(path),
+        )
         counts[name] = n
         log_step(spark, log_path, name, n, "loaded", load_id)
         return n
@@ -105,7 +113,6 @@ def run_incremental_pipeline(
         ("increment", F.year(F.col("o_orderdate")) > split, lambda y: y > split),
     ]
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     full_fact = fact_plan.fact_orders(spark, sf_dir)
     for label, ord_pred, year_pred in slices:
         load_id = seq.next()
@@ -120,8 +127,13 @@ def run_incremental_pipeline(
             F.col("order_year").isin([y for y in years if year_pred(y)])
         )
         # dynamic overwrite: only this load's year directories rewrite
-        fact_slice.write.mode("overwrite").partitionBy("order_year").parquet(fact_path)
-        counts[f"{label}.fact_rows"] = fact_slice.count()
+        counts[f"{label}.fact_rows"] = write_counted(
+            fact_slice,
+            lambda w: w.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("order_year")
+            .parquet(fact_path),
+        )
         log_step(
             spark, log_path, f"fact_inc_{label}", counts[f"{label}.fact_rows"],
             "loaded", load_id,

@@ -13,6 +13,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _cpus() -> str:
+    """Local cores to plan for: ``SPARK_GRAFT_CPUS`` when set, else the
+    host's core count (a fixed default oversubscribes small hosts)."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
+
+
 def session_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
     """THE session config dict — the single source the bench, the
     driver entry, and every measurement tool build from (round-14,
@@ -30,9 +36,8 @@ def session_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
     - Arrow enabled for any pandas interop (similarity / multimodal
       operators use Arrow-batched pandas UDFs, never row-at-a-time).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
+        shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", _cpus()))
     return {
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -58,9 +63,7 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for the warehouse
     workload — see ``session_confs`` for the config rationale."""
-    master = os.environ.get(
-        "SPARK_MASTER", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-    )
+    master = os.environ.get("SPARK_MASTER", f"local[{_cpus()}]")
     builder = SparkSession.builder.master(master).appName(app_name)
     for k, v in session_confs(shuffle_partitions).items():
         builder = builder.config(k, v)

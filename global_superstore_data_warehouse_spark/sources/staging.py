@@ -3,19 +3,26 @@ guard (S2/S3/S4, /root/reference/Database/BL_CL/bl_cl.sql:12-68).
 
 The reference keeps a single-row ``current_load_id`` table and
 read-increment-updates it per run; here the sequencer state is a tiny
-JSON file (driver-side metadata — it is one integer, not data).
+JSON file (driver-side metadata — it is one integer, not data),
+replaced atomically on each update.
 Staged tables are parquet, partitioned by ``load_id`` so incremental
 loads append a new partition and every downstream read of one load
 prunes to exactly one directory (P3's load_id filter becomes
 partition pruning at any scale).
+
+Row counts come from the write itself: ``write_counted`` attaches a
+count metric to the written frame (``DataFrame.observe``), so the
+rowcount a step returns and audits costs no job beyond the write —
+no re-read of what was just written.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from global_superstore_data_warehouse_spark.functions.cleaning import with_audit_cols
@@ -34,10 +41,17 @@ class LoadIdSequencer:
             return json.load(f)["load_id"]
 
     def next(self) -> int:
+        """Allocate the next load id. The new state is written to a
+        dot-prefixed temp file and renamed over the old one, so a crash
+        mid-write leaves the previous id readable, never a truncated
+        file."""
         v = self.current() + 1
-        os.makedirs(os.path.dirname(self.state_path), exist_ok=True)
-        with open(self.state_path, "w") as f:
+        d, name = os.path.split(self.state_path)
+        os.makedirs(d, exist_ok=True)
+        tmp = os.path.join(d, f".{name}.tmp")
+        with open(tmp, "w") as f:
             json.dump({"load_id": v}, f)
+        os.replace(tmp, self.state_path)
         return v
 
 
@@ -61,6 +75,15 @@ def _fs_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
+def write_counted(df: DataFrame, write: Callable[[DataFrameWriter], None]) -> int:
+    """Run ``write`` on ``df``'s writer and return the number of rows
+    written, observed on the write itself rather than counted by a
+    second job."""
+    obs = Observation()
+    write(df.observe(obs, F.count(F.lit(1)).alias("rows")).write)
+    return obs.get["rows"]
+
+
 def stage_append(
     df: DataFrame,
     target_path: str,
@@ -78,9 +101,10 @@ def stage_append(
     part_dir = f"{target_path.rstrip('/')}/load_id={load_id}"
     if _fs_exists(spark, part_dir):
         raise AlreadyLoadedError(f"This data was already loaded (load_id={load_id}).")
-    staged = with_audit_cols(df, load_id)
-    staged.write.mode("append").partitionBy("load_id").parquet(target_path)
-    return spark.read.parquet(target_path).filter(F.col("load_id") == str(load_id)).count()
+    return write_counted(
+        with_audit_cols(df, load_id),
+        lambda w: w.mode("append").partitionBy("load_id").parquet(target_path),
+    )
 
 
 def read_load(spark: SparkSession, path: str, load_id: int) -> DataFrame:

@@ -2,18 +2,48 @@
 audit log, partitioned fact output, view materialization (SURVEY §3,
 C1-C7; reference invariants FIXTURES.md §4)."""
 
+import contextlib
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
+# Spark jobs one sf0.001 build runs: one per artifact written (with
+# AQE, one more per shuffle or broadcast stage) plus the staging guards.
+# A re-read count or a Spark-written audit row per step breaks it.
+FULL_BUILD_JOBS = 64
+INCREMENTAL_BUILD_JOBS = 41
+
+
+@contextlib.contextmanager
+def job_group(spark, sf_dir, group):
+    """Tag the Spark jobs run inside the block with ``group``; yields a
+    function returning how many there were so far. The catalog's table
+    scans are built first, so their schema jobs, which run only on the
+    session's first load of a table, do not make the count depend on
+    which tests ran before."""
+    from global_superstore_data_warehouse_spark.catalog import TABLES, load
+
+    for t in TABLES:
+        load(spark, sf_dir, t)
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
+
 
 def test_pipeline_end_to_end(spark, sf_dir, tmp_path):
+    from pyspark.sql.types import StructType
+
     from global_superstore_data_warehouse_spark.plans.pipeline import run_pipeline
-    from global_superstore_data_warehouse_spark.sources.audit import read_log
+    from global_superstore_data_warehouse_spark.sources.audit import LOG_SCHEMA, read_log
 
     out = str(tmp_path / "wh")
-    counts = run_pipeline(spark, sf_dir, out)
+    with job_group(spark, sf_dir, "test_pipeline_end_to_end") as jobs:
+        counts = run_pipeline(spark, sf_dir, out)
+        assert jobs() <= FULL_BUILD_JOBS
     assert counts["staging.orders"] > 0
     assert counts["3nf/fct_orders"] > 0
     assert counts["dm/yearly_sales_profit"] > 0
@@ -22,19 +52,33 @@ def test_pipeline_end_to_end(spark, sf_dir, tmp_path):
     years = [d for d in os.listdir(os.path.join(out, "3nf/fct_orders")) if d.startswith("order_year=")]
     assert len(years) > 1
 
-    # audit log has one row per step (C7)
-    log = read_log(spark, os.path.join(out, "etl_log"))
-    assert log.count() == len(counts)
-    assert log.filter(F.col("rows_affected") <= 0).count() == 0
-
-    # partition pruning works on the staged load (P3)
+    # every returned count is the row count of what was written
     from global_superstore_data_warehouse_spark.sources.staging import read_load
 
-    staged = read_load(spark, os.path.join(out, "staging/orders"), 1)
-    assert staged.count() == counts["staging.orders"]
+    for key, n in counts.items():
+        if key.startswith("staging."):
+            # partition pruning works on the staged load (P3)
+            path = os.path.join(out, "staging", key.split(".", 1)[1])
+            assert read_load(spark, path, 1).count() == n, key
+        else:
+            assert spark.read.parquet(os.path.join(out, key)).count() == n, key
+
+    # audit log has one row per step (C7), with the declared schema,
+    # and ignores a temp file a crashed audit write leaves behind
+    log_dir = os.path.join(out, "etl_log")
+    with open(os.path.join(log_dir, ".part-crashed.tmp"), "wb") as f:
+        f.write(b"PAR1 truncated")
+    log = read_log(spark, log_dir)
+    assert log.schema == StructType.fromDDL(LOG_SCHEMA)
+    assert log.count() == len(counts)
+    assert log.filter(F.col("rows_affected") <= 0).count() == 0
+    assert {r.procedure_name: r.rows_affected for r in log.collect()} == {
+        (f"stage_{k.split('.', 1)[1]}" if k.startswith("staging.") else k): n
+        for k, n in counts.items()
+    }
 
 
-def test_staging_guards(spark, sf_dir, tmp_path):
+def test_staging_guards(spark, sf_dir, tmp_path, monkeypatch):
     from global_superstore_data_warehouse_spark.catalog import load
     from global_superstore_data_warehouse_spark.sources.staging import (
         AlreadyLoadedError,
@@ -48,6 +92,19 @@ def test_staging_guards(spark, sf_dir, tmp_path):
     assert seq.next() == 1
     assert seq.next() == 2
     assert seq.current() == 2
+
+    # a crash while writing the new id leaves the old one readable
+    import json
+
+    def crash(*args, **kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", crash)
+    with pytest.raises(OSError):
+        seq.next()
+    monkeypatch.undo()
+    assert seq.current() == 2
+    assert seq.next() == 3
 
     region = load(spark, sf_dir, "region")
     target = str(tmp_path / "staging/region")
@@ -85,17 +142,30 @@ def test_incremental_pipeline(spark, sf_dir, tmp_path):
     )
     from global_superstore_data_warehouse_spark.sources.staging import (
         AlreadyLoadedError,
+        read_load,
         stage_append,
     )
 
     out = str(tmp_path / "inc")
-    counts = run_incremental_pipeline(spark, sf_dir, out)
+    overwrite_mode = "spark.sql.sources.partitionOverwriteMode"
+    mode_before = spark.conf.get(overwrite_mode)
+    with job_group(spark, sf_dir, "test_incremental_pipeline") as jobs:
+        counts = run_incremental_pipeline(spark, sf_dir, out)
+        assert jobs() <= INCREMENTAL_BUILD_JOBS
+    # dynamic overwrite is scoped to the pipeline's own writer
+    assert spark.conf.get(overwrite_mode) == mode_before
     staged = spark.read.parquet(f"{out}/staging_inc/orders")
     assert sorted(r.load_id for r in staged.select("load_id").distinct().collect()) == [1, 2]
     # incremental fact == full rebuild
     full = fact_orders(spark, sf_dir)
     inc = spark.read.parquet(f"{out}/3nf_inc/fct_orders")
     assert inc.count() == full.count() == counts["fact_total"]
+    # each load's counts are the rows it staged and the fact rows of its years
+    for load_id, label in ((1, "initial"), (2, "increment")):
+        orders = read_load(spark, f"{out}/staging_inc/orders", load_id)
+        assert orders.count() == counts[f"{label}.orders"]
+        years = orders.select(F.year("o_orderdate").alias("order_year")).distinct()
+        assert inc.join(years, "order_year").count() == counts[f"{label}.fact_rows"]
     assert inc.select("order_key", "line_number").exceptAll(
         full.select("order_key", "line_number")
     ).count() == 0

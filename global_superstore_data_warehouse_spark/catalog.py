@@ -89,10 +89,6 @@ def _load_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
 def _freshness_token(path: str) -> tuple[int, int]:
     """(max mtime_ns, total bytes) over the table's parquet files —
     a stat-only fingerprint (no footer opens) that changes whenever

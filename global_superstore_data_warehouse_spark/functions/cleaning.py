@@ -1,4 +1,5 @@
-"""Scalar cleaning/conforming expressions (SURVEY §2.3, complete F1-F13).
+"""Scalar cleaning/conforming expressions (SURVEY §2.3 F1-F13; the F6
+sentinel end date and the F12 ROUND are inline at their use sites).
 
 Re-expresses the reference's PL/pgSQL string surgery as pure
 `pyspark.sql.functions` column expressions — JVM-side, inside
@@ -53,13 +54,6 @@ def parse_date_ddmmyyyy(c: Column | str) -> Column:
     return F.to_date(c, "dd-MM-yyyy")
 
 
-def sentinel_end_dt() -> Column:
-    """Open-version end-date sentinel (bl_cl.sql:832; bl_3nf.sql:225).
-    A function, not a module constant: building a Column requires an
-    active SparkContext, which must not be an import-time demand."""
-    return F.to_date(F.lit("9999-12-31"))
-
-
 def audit_timestamp() -> Column:
     """to_char(NOW(),'YYYY-MM-DD HH24:MI:SS') (bl_cl.sql:55)."""
     return F.date_format(F.current_timestamp(), "yyyy-MM-dd HH:mm:ss")
@@ -72,7 +66,3 @@ def with_audit_cols(df: DataFrame, load_id: int) -> DataFrame:
         "load_id", F.lit(str(load_id))
     )
 
-
-def round_money(c: Column, scale: int = 2) -> Column:
-    """ROUND(x::numeric, 2) (bl_dm.sql:275)."""
-    return F.round(c, scale)

@@ -83,12 +83,10 @@ def spread_scan(
 
     spark = df.sparkSession
     n = _session_parallelism(df)
-    # the conf value is a SIZE STRING ('134217728b', '512m', ...) —
-    # round-14 ADVICE fix: int() always raised on the unit suffix and
-    # the bare except silently pinned the gate to the 128 MB default,
-    # ignoring a deployment-tuned maxPartitionBytes. Parse with the
-    # same JavaUtils routine Spark itself uses; the hard default only
-    # remains for a session with no JVM gateway (never in practice).
+    # the conf value is a SIZE STRING ('134217728b', '512m', ...):
+    # parse it with the JavaUtils routine Spark itself uses, so a
+    # deployment-tuned value moves the gate and a malformed one raises
+    # here, at plan time, instead of falling back to a default.
     raw = spark.conf.get(
         "spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024)
     )

@@ -499,59 +499,6 @@ def _png_decode(b: bytes):
     return np.ascontiguousarray(px[:, :, :3])  # RGBA -> drop alpha
 
 
-_IMAGE_BACKEND: str | None = None  # resolved once per process
-
-
-def _image_backend() -> str:
-    """'pil' or 'pure'. The native backend is OPT-IN
-    (``SPARK_GRAFT_IMAGE_BACKEND=pil`` forces it, ``auto`` probes
-    for PIL); the DEFAULT is the pure spec-derived path. Deliberate:
-    the registered decode queries carry EXACT-equality oracles
-    (constant-luma JPEG fixtures reconstruct their fill precisely
-    under the in-repo IDCT), and libjpeg's IDCT rounds differently —
-    an auto-probed default would silently change registered-query
-    results based on whether pillow happens to be installed. A real
-    deployment opts in per pipeline, where decode outputs feed
-    stats/features, not hash-compared oracles."""
-    global _IMAGE_BACKEND
-    if _IMAGE_BACKEND is None:
-        import os
-
-        mode = os.environ.get("SPARK_GRAFT_IMAGE_BACKEND", "pure").lower()
-        if mode == "pil":
-            import PIL.Image  # noqa: F401  (ImportError = config error)
-
-            _IMAGE_BACKEND = "pil"
-        elif mode == "auto":
-            try:
-                import PIL.Image  # noqa: F401
-
-                _IMAGE_BACKEND = "pil"
-            except ImportError:
-                _IMAGE_BACKEND = "pure"
-        else:
-            _IMAGE_BACKEND = "pure"
-    return _IMAGE_BACKEND
-
-
-def _pil_decode(b: bytes):
-    """Native decode via PIL -> (h, w, 3) uint8 RGB, or None when
-    PIL cannot open/convert this blob (the caller then falls back to
-    the pure path — e.g. a format this PIL build lacks)."""
-    import io
-
-    import numpy as np
-    from PIL import Image
-
-    try:
-        with Image.open(io.BytesIO(b)) as im:
-            return np.ascontiguousarray(
-                np.asarray(im.convert("RGB"), dtype=np.uint8)
-            )
-    except Exception:
-        return None
-
-
 def decode_image(blob: bytes):
     """Decode a BMP (24-bit BI_RGB), PPM (P6) or PNG (gray/
     gray+alpha/RGB/RGBA at 8/16-bit + palette at 1/2/4/8-bit,
@@ -564,29 +511,10 @@ def decode_image(blob: bytes):
     scaling). JPEG (baseline SOF0 and progressive SOF2) delegates to
     ``operators/jpeg.py``; other formats raise NotImplementedError:
     WEBP/AVIF and arithmetic-coded/12-bit/hierarchical JPEG need
-    codec libraries this container lacks.
-
-    BACKEND DISPATCH (round 11): an OPT-IN native path — the
-    pure-Python spec-derived decode is a ~100x per-core tax at real
-    scale and exists because this sandbox has no codec libraries.
-    Selection: ``SPARK_GRAFT_IMAGE_BACKEND`` = ``pil`` (force
-    PIL/libjpeg, ImportError if absent), ``auto`` (probe once per
-    process), unset/``pure`` (DEFAULT: the spec decoder — kept as
-    the default because the registered decode queries' oracles pin
-    exact pixel arithmetic; see ``_image_backend``). The mode is
-    cached module-level, so per-blob dispatch in the mapInPandas hot
-    loop is one comparison; Spark python workers re-import the
-    module and re-resolve, so executors honor the same env.
-    Equivalence is pinned in tests/test_multimodal.py: pixel-exact
-    for the lossless formats, stats-tolerance for JPEG (different
-    IDCT roundings)."""
+    codec libraries this container lacks."""
     import numpy as np
 
     b = bytes(blob)
-    if _image_backend() == "pil":
-        px = _pil_decode(b)
-        if px is not None:
-            return px
     if b[:8] == b"\x89PNG\r\n\x1a\n":
         return _png_decode(b)
     if b[:2] == b"\xff\xd8":

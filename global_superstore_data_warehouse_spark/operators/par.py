@@ -33,8 +33,11 @@ T = TypeVar("T")
 
 def build_concurrently(*thunks: Callable[[], T]) -> list[T]:
     """Run each zero-arg builder in its own driver thread and return
-    their results in argument order. Exceptions propagate (the first
-    raising thunk fails the call, as sequential construction would).
+    their results in argument order. The call returns or raises only
+    after EVERY thunk has finished (the pool's ``with`` exit waits for
+    all of them), so a failure does not cut the other builds short.
+    When thunks fail, the exception raised is that of the first-listed
+    failing thunk, whichever failed first in time.
     """
     if len(thunks) <= 1:
         return [t() for t in thunks]

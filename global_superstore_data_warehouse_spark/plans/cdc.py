@@ -14,7 +14,7 @@ the row. The scalable shape is NOT "loop over changes in order"
 One shuffle on the key, O(changes) state, no iteration — the same
 plan at 100 changes or 100 TB of them. The streaming twin is
 ``applyInPandasWithState`` keyed by the same column (or Delta's
-``MERGE`` per micro-batch, operators/merge_delta.py).
+``MERGE`` per micro-batch on a Delta-equipped cluster).
 
 The change stream here is derived deterministically from the static
 ``orders`` table (the driver provides no real CDC feed): a 75% slice

@@ -20,10 +20,10 @@ the first 50 entries only. Since round 8 the window is defined
 EXPLICITLY by the current ``ROUND{N}_WINDOW`` list at the bottom of
 this file (``registry.promote`` reorders the registry so the list
 comes first) — rotating is one list edit, not a reshuffle of
-register() blocks. Earlier rotations (rounds 3-11) are recorded in
-git history / the ROUND9/10/11_WINDOW lists below. Everything
-outside the window keeps identical DuckDB-oracle parity coverage in
-pytest (tests/conftest.py::assert_matches_oracle), and the opt-in
+register() blocks. Earlier rotations (rounds 3-12) are recorded in
+git history. Everything outside the window keeps identical
+DuckDB-oracle parity coverage in pytest
+(tests/conftest.py::assert_matches_oracle), and the opt-in
 sf0.1 sweep (tests/test_parity_bench_scale.py) re-proves the whole
 registry at bench scale once per round.
 """
@@ -243,7 +243,7 @@ register(
 # rows-only entry events_hourly_approx_users so the window still
 # carries exactly one no-oracle row)
 register("daily_user_sketch_rollup", events.daily_user_sketch_rollup, None)
-# NEW round 11 (net-zero budget; ROUND11_WINDOW first-timers): the
+# NEW round 11 (net-zero budget; round-11 window first-timers): the
 # two sketch queries above are the registry's only rows-only driver
 # records (HLL estimates have no deterministic SQL oracle). These
 # audit twins close that gap: each joins the sketch estimate to the
@@ -1009,7 +1009,7 @@ register(
     lakehouse.mor_merge_upsert,
     lakehouse.MOR_MERGE_UPSERT_ORACLE,
 )
-# NEW late round 10 (within the net-zero budget; ROUND11_WINDOW
+# NEW late round 10 (within the net-zero budget; round-11 window
 # entrant): REAL video decode — per-doc AVI 1.0 containers (MJPEG
 # 'vids' stream, movi list, idx1) parsed by the vendored RIFF walker,
 # every 2nd frame JPEG-decoded (baseline/progressive alternating)
@@ -1021,7 +1021,7 @@ register(
     multimodal.video_frame_sample_stats,
     multimodal.VIDEO_FRAME_SAMPLE_ORACLE,
 )
-# NEW late round 10 (net-zero budget; ROUND11_WINDOW entrant): audio
+# NEW late round 10 (net-zero budget; round-11 window entrant): audio
 # FEATURE extraction after the real WAV decode — zero-crossings,
 # exact integer RMS (isqrt at micro precision), and a windowed
 # voice-activity profile over a clip with genuine silent/voiced
@@ -1031,7 +1031,7 @@ register(
     multimodal.audio_vad_features,
     multimodal.AUDIO_VAD_FEATURES_ORACLE,
 )
-# NEW late round 10 (net-zero budget; ROUND11_WINDOW entrant): WARC
+# NEW late round 10 (net-zero budget; round-11 window entrant): WARC
 # web-archive ingestion — per-doc .warc.gz blobs (three records,
 # per-record gzip members, HTTP response payload) split, parsed, and
 # header-stripped by the vendored pure-python reader; the oracle
@@ -1095,7 +1095,7 @@ register(
     lakehouse.mor_change_feed,
     lakehouse.MOR_CHANGE_FEED_ORACLE,
 )
-# NEW round 11 (net-zero budget; ROUND11_WINDOW first-timer): the MOR
+# NEW round 11 (net-zero budget; round-11 window first-timer): the MOR
 # table service — threshold-driven per-bucket compaction scheduling
 # (mortable.compact_buckets) audited end-to-end: exactly the
 # over-threshold buckets fold, their delete keys vanish from the
@@ -1241,172 +1241,17 @@ register(
 
 
 # ======================================================================
-# DRIVER CORRECTNESS WINDOW — round 10 rotation
+# DRIVER CORRECTNESS WINDOW
 # ======================================================================
 # The driver records CORRECTNESS rows for the FIRST 50 registry
-# entries only. ``registry.promote`` reorders the registry so this
-# list IS the window — rotations are one list edit (plus the pin in
-# tests/test_driver_contract.py). Round-10 composition, per the
-# round-9 verdict directive: ALL 17 remaining never-driver-checked
-# backlog entries (the retail/observability/textops tail — this
-# drives the never-checked backlog to ZERO) + 33 repeat-green
-# representatives spread across every operator family (views,
-# warehouse, SCD, fact, DM, pipeline, COW lakehouse, security,
-# conformance, cleansing, windows, dedup/textops, ANN/embeddings,
-# events/streaming, multimodal, observability, mixtures, stats,
-# graph, curation, setsim, CDC). Every first-timer was verified
-# hash-green at sf0.01 via tools/check_some.py before rotation.
-# Everything outside the window keeps identical DuckDB-oracle parity
-# coverage in pytest (tests/conftest.py::assert_matches_oracle).
+# entries only. ``registry.promote`` reorders the registry so the
+# current list IS the window — rotations are one list edit (plus the
+# pin in tests/test_driver_contract.py). Everything outside the window
+# keeps identical DuckDB-oracle parity coverage in pytest
+# (tests/conftest.py::assert_matches_oracle). Windows of rounds 3-12
+# live in git history; ROUND13_WINDOW stays for the contract test's
+# rotated-out pin.
 #
-# Round 9's window is preserved below (ROUND9_WINDOW) for the
-# contract test's history pin; git history holds rounds 3-8.
-ROUND9_WINDOW = [
-    # -- repeat-green representatives (10) --
-    "yearly_sales_profit",
-    "surrogate_keys_customers",
-    "conform_two_sources",
-    "scd2_two_load_lifecycle",
-    "fact_orders",
-    "incremental_mv_refresh",
-    "secured_customers_analyst",
-    "minhash_lsh_candidates",
-    "dedup_clusters",
-    "cow_merge_upsert",
-    # -- first-timers: round-8 additions (29) --
-    "unimax_language_budgets",
-    "stream_interval_join_attribution",
-    "retrieval_ndcg_eval",
-    "dedup_bcubed_agreement",
-    "stream_static_enrichment",
-    "stream_dedup_exactly_once",
-    "exact_percentile_twopass",
-    "split_semantic_leakage",
-    "consistent_shard_rebalance",
-    "ks_drift_statistic",
-    "chisq_category_drift",
-    "kmv_audience_overlap",
-    "sorted_neighborhood_pairs",
-    "kcenter_coreset",
-    "kaplan_meier_churn",
-    "tpch_avg_yearly",
-    "tpch_custdist",
-    "clustering_coefficients",
-    "rank_fusion_rrf",
-    "shapley_channel_attribution",
-    "price_volume_mix",
-    "quantile_normalization",
-    "target_encoding_loo",
-    "bootstrap_revenue_ci",
-    "kcore_membership",
-    "daily_ohlc",
-    "revenue_gini",
-    "cusum_changepoint",
-    "winnowing_matches",
-    # -- first-timers: backlog novel shapes (11) --
-    "multimodal_decode_stats",
-    "boilerplate_strip",
-    "duplicate_span_islands",
-    "dedup_clusters_smallstar",
-    "domain_quota_sample_twophase",
-    "dedup_normalized_docs",
-    "corpus_report",
-    "training_shards",
-    "join_skew_report",
-    "psi_event_drift",
-    "embedding_standardize",
-]
-
-ROUND10_WINDOW = [
-    # -- first-timers: the final 17 never-driver-checked entries --
-    "hard_negative_mining",
-    "lang_id_confusion",
-    "pareto_products",
-    "rfm_segments",
-    "zipf_slope_by_source",
-    "token_entropy_by_source",
-    "events_dedup_bursts",
-    "bpe_pair_counts",
-    "doclen_histogram",
-    "order_cadence",
-    "churn_flags",
-    "supplier_concentration",
-    "fulfillment_lead_time",
-    "quality_percentiles",
-    "seasonal_index",
-    "lateness_profile",
-    "abc_migration",
-    # -- first-timers: the round-10 net-zero-rule registrations --
-    "mor_merge_upsert",
-    # late round 10: the multimodal/ingestion additions enter the
-    # CURRENT window (the very next driver check), displacing three
-    # repeat-greens whose families stay represented: multimodal_
-    # decode_stats (r09 green; video+audio twins below exercise the
-    # same decoders end-to-end), kcenter_coreset (ANN keeps
-    # cosine_topk + ann_ivf_pq), training_shards (r09 green;
-    # curation keeps decontaminate_bloom + join_skew_report).
-    "video_frame_sample_stats",
-    "audio_vad_features",
-    "warc_ingest_stats",
-    # still later round 10: the training-shard ingestion pair, same
-    # treatment — windowed immediately, displacing two repeat-greens
-    # (pricing_summary: headline-benched every round + r09 green;
-    # dim_date: r05 green, warehouse family keeps
-    # surrogate_keys_customers + best_month_per_segment).
-    "tfrecord_ingest_stats",
-    "webdataset_ingest_stats",
-    # and the Avro OCF reader, displacing demand_category_region
-    # (headline-benched every round + r09 driver-green).
-    "avro_ingest_stats",
-    # and the Arrow IPC interchange audit, displacing
-    # fact_pit_customers (r05 green; SCD family keeps
-    # scd2_two_load_lifecycle + fact_orders).
-    "arrow_ipc_ingest_stats",
-    # and the COW change-data-feed read, displacing dedup_clusters
-    # (green r09; dedup family keeps minhash_lsh_candidates +
-    # jaccard_prefix_pairs + winnowing_matches + its smallstar twin
-    # in pytest).
-    "cow_change_feed",
-    # plus the MOR twin of the change feed (same oracle), displacing
-    # ann_ivf_pq (r09 green; ANN family keeps cosine_topk in the
-    # window and the full IVF/PQ family in pytest).
-    "mor_change_feed",
-    # -- repeat-green family representatives (23) --
-    # views / warehouse / star schema
-    "yearly_sales_profit",
-    "surrogate_keys_customers",
-    # SCD / fact / DM / pipeline / lakehouse / CDC
-    "scd2_two_load_lifecycle",
-    "fact_orders",
-    "order_details_wide",
-    "incremental_mv_refresh",
-    "cow_merge_upsert",
-    "cdc_apply_orders",
-    # security / conformance / cleansing / windows
-    "secured_customers_analyst",
-    "conform_two_sources",
-    "sorted_neighborhood_pairs",
-    "best_month_per_segment",
-    # dedup / textops / setsim
-    "minhash_lsh_candidates",
-    "winnowing_matches",
-    "jaccard_prefix_pairs",
-    # ANN / embeddings
-    "cosine_topk",
-    # events / streaming
-    "events_sessionize",
-    "stream_dedup_exactly_once",
-    "stream_interval_join_attribution",
-    # observability / mixtures / curation
-    "join_skew_report",
-    "decontaminate_bloom",
-    # stats / graph (vocab_topk dropped to make room for
-    # mor_merge_upsert: it is headline-benched every round and was
-    # hash-green in r01/r02 + pytest)
-    "bootstrap_revenue_ci",
-    "kcore_membership",
-]
-
 # NET-ZERO-DEBT RULE (standing, adopted round 10 once the backlog hit
 # zero): new query registrations per round MUST NOT exceed what the
 # next 50-slot window can absorb alongside ~10 repeat representatives
@@ -1414,141 +1259,6 @@ ROUND10_WINDOW = [
 # enters the very next window as a first-timer. tools/rotation_queue.py
 # is the audit: its "never-checked backlog" must print empty at each
 # round boundary.
-
-# ROUND 11: verification-freshness rotation. Never-checked debt hit
-# zero in round 10, so the risk shifted to STALENESS: the window below
-# is the 50 entries with the OLDEST last-green driver round, computed
-# from the CORRECTNESS_r01–r10 union (tools/rotation_queue.py audits;
-# 25 entries last green in r02, 22 in r03), plus the round's three
-# net-zero-rule first-timers (the two sketch audit twins replacing
-# the registry's only rows-only records, and the MOR compaction
-# policy sweep). The only r03-era green NOT re-windowed is
-# vocab_topk — headline-benched (and therefore re-run) every round.
-ROUND11_WINDOW = [
-    # -- first-timers: round-11 net-zero-rule registrations --
-    "daily_user_sketch_rollup_audit",
-    "events_hourly_approx_users_audit",
-    "mor_compaction_policy",
-    # -- stalest greens: last driver row r02 (25) --
-    "case_insensitive_segments",
-    "clean_dirty_ids",
-    "customer_ltv_deciles",
-    "customers_with_orders",
-    "demand_category_region",
-    "dim_market",
-    "distinct_union_brands",
-    "dq_report",
-    "duplicate_orders",
-    "events_json_props",
-    "fuzzy_name_match",
-    "merged_entities",
-    "new_customers",
-    "parse_dates",
-    "priority_distribution",
-    "qa_duplicates_any_table",
-    "qa_rowcounts",
-    "rolling_7d_sales",
-    "scd1_upsert_customers",
-    "segment_sales",
-    "split_names",
-    "top_employees_per_year",
-    "types_in_both_halves",
-    "types_missing_from_sample",
-    "union_all_segments",
-    # -- stalest greens: last driver row r03 (22) --
-    "ann_lsh_topk",
-    "crossmodal_near_dup",
-    "dedup_exact_docs",
-    "deterministic_sample",
-    "dim_product_hierarchy",
-    "doc_fingerprints",
-    "embedding_centroids",
-    "embedding_near_dup",
-    "events_hourly",
-    "lang_id",
-    "lineitem_measures_unpivot",
-    "multimodal_frame_sample",
-    "multimodal_resize",
-    "ngram_jaccard_pairs",
-    "pack_chunks",
-    "repetition_stats",
-    "sales_pivot",
-    "scd2_employees",
-    "scd2_products",
-    "simhash_docs",
-    "stratified_sample",
-    "token_stats",
-]
-
-# ROUND 12: staleness rotation, continued. The window below is the 50
-# entries with the OLDEST last-green driver round per
-# tools/rotation_queue.py over the CORRECTNESS_r01–r11 union:
-# vocab_topk (r03 — deliberately included this time; it is headline-
-# benched every round but had not carried a driver CORRECTNESS row
-# since r03), the full r04 cohort (11), the full r05 cohort (26), and
-# the alphabetical head of the r07 cohort (11). new_customers is
-# freshly green in r11 but re-enters as the round's one CHANGED entry:
-# its probe was restricted to the 1995 order book so the anti-join
-# result is non-empty at sf0.01 (the r11 verdict flagged the old
-# driver row as trivially green on 0 rows). No new registrations this
-# round (net-zero trivially holds).
-ROUND12_WINDOW = [
-    # -- changed this round: probe de-trivialized (326 rows at sf0.01) --
-    "new_customers",
-    # -- stalest green: last driver row r03 --
-    "vocab_topk",
-    # -- stalest greens: last driver row r04 (11) --
-    "chunk_overlap",
-    "cluster_representatives",
-    "cohort_retention",
-    "decontaminate_ngrams",
-    "dim_geography",
-    "dm_scd2_propagation",
-    "event_transitions",
-    "events_sliding",
-    "sales_rollup",
-    "span_dup_stats",
-    "top_events_per_user",
-    # -- stalest greens: last driver row r05 (26) --
-    "ann_ivf_topk",
-    "ann_recall",
-    "copurchase_triangles",
-    "dedup_incremental",
-    "dim_address",
-    "dim_date",
-    "domain_quota_sample",
-    "event_funnel",
-    "events_gapfill",
-    "events_hourly_approx_users",
-    "golden_record_customers",
-    "kmeans_assign",
-    "market_basket_pairs",
-    "minhash_recall_eval",
-    "multimodal_features",
-    "nearest_purchase_to_error",
-    "pii_pseudonymize_customers",
-    "pricing_summary",
-    "priority_price_quantiles",
-    "quality_filter",
-    "scd2_customers",
-    "scd2_snapshot_diff",
-    "semantic_dedup",
-    "session_maintenance_overlap",
-    "text_quality",
-    "tfidf_topk_terms",
-    # -- stalest greens: last driver row r07, alphabetical head (11) --
-    "ann_int8_rerank",
-    "audio_decode_stats",
-    "benford_order_totals",
-    "bigram_surprisal_scores",
-    "cluster_balanced_sample",
-    "copurchase_bfs_layers",
-    "countmin_heavy_hitters",
-    "daily_revenue_ewma",
-    "daily_user_sketch_rollup",
-    "daily_users_kmv",
-    "dedup_savings_report",
-]
 
 # ROUND 13: staleness rotation, continued. The window below is the 50
 # entries with the OLDEST last-green driver round per

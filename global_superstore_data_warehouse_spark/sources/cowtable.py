@@ -1,12 +1,11 @@
 """Copy-on-write versioned parquet table with a transaction log —
 the §2.9 "at 100 TB switch to ACID MERGE" swap-in, EXECUTED.
 
-``operators/merge_delta.py`` expresses SCD1/SCD2 through
-``DeltaTable.merge``, but delta-spark cannot be installed in this
-sandbox (no network), so that path skips. This module makes the same
-file-level claim runnable with zero extra dependencies: a minimal
-lakehouse layout — immutable parquet data files + an append-only JSON
-commit log — where MERGE rewrites ONLY the files whose key-bucket the
+Delta Lake expresses SCD1/SCD2 through ``DeltaTable.merge``. This
+module makes the same file-level claim runnable without delta-spark
+or any other extra dependency: a minimal lakehouse layout —
+immutable parquet data files + an append-only JSON commit log —
+where MERGE rewrites ONLY the files whose key-bucket the
 source batch touches, readers see atomic snapshots, and any historic
 version remains readable (time travel). It is the mechanism Delta's
 MERGE uses (file pruning via partition values + footer min/max
@@ -94,13 +93,6 @@ def _bucket_col(key: F.Column, meta: dict) -> F.Column:
     b = F.lit(hi - lo + 1)
     q = ((a - a % b) / b).cast("int")
     return F.greatest(F.lit(0), F.least(F.lit(n - 1), q))
-
-
-def bucket_sql(key_expr: str, meta: dict) -> str:
-    """The bucket function as ANSI SQL (for DuckDB oracles)."""
-    lo, hi, n = meta["lo"], meta["hi"], meta["nbuckets"]
-    raw = f"(({key_expr} - {lo}) * {n}) // ({hi - lo + 1})"
-    return f"GREATEST(0, LEAST({n - 1}, CAST({raw} AS INT)))"
 
 
 def _file_stats(path: str, key: str) -> tuple[int, int, int]:

@@ -657,223 +657,3 @@ def test_streaming_scd2_replay_is_noop(spark, sf_dir, tmp_path):
     )
     assert after == before
     assert read_watermark(spark, dim) == 2
-
-
-def test_tws_sessionize_equals_applyinpandas_twin(spark, sf_dir, tmp_path):
-    """The transformWithStateInPandas sessionizer (the Spark-4 typed
-    state store + timers API) must emit exactly the same session set
-    as the applyInPandasWithState twin on the same availableNow
-    drain, and obey the same batch-twin bounds."""
-    import pytest
-
-    from global_superstore_data_warehouse_spark.streaming.stateful_tws import (
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip(
-            "transformWithState's Python protocol needs google.protobuf,"
-            " not installed in this sandbox (no network; README matrix)"
-        )
-    from global_superstore_data_warehouse_spark.plans.events import (
-        events_sessionize,
-    )
-    from global_superstore_data_warehouse_spark.streaming.events import (
-        read_events_stream,
-    )
-    from global_superstore_data_warehouse_spark.streaming.stateful import (
-        sessionize_stream,
-    )
-    from global_superstore_data_warehouse_spark.streaming.stateful_tws import (
-        sessionize_stream_tws,
-    )
-
-    def drain(stream, name, ckpt):
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return set(
-            map(
-                tuple,
-                spark.sql(f"SELECT * FROM {name}")
-                .select(
-                    "user_id",
-                    "session_start",
-                    "session_end",
-                    F.col("n_events").cast("long"),
-                    F.round("sum_value", 2),
-                )
-                .collect(),
-            )
-        )
-
-    got_tws = drain(
-        sessionize_stream_tws(read_events_stream(spark, sf_dir)),
-        "sessions_tws", "ckpt_tws",
-    )
-    got_aip = drain(
-        sessionize_stream(read_events_stream(spark, sf_dir)),
-        "sessions_aip", "ckpt_aip",
-    )
-    # both APIs: identical closed-session emission on the same input
-    # (timer flush timing may differ by design — compare the closed
-    # core both must emit, then bound both by the true session set)
-    batch = events_sessionize(spark, sf_dir)
-    sess_cols = [
-        "user_id",
-        F.unix_timestamp("session_start").alias("session_start"),
-        F.unix_timestamp("session_end").alias("session_end"),
-        F.col("n_events").cast("long").alias("n_events"),
-        "sum_value",
-    ]
-    all_sessions = set(map(tuple, batch.select(*sess_cols).collect()))
-    last_seq = batch.groupBy("user_id").agg(
-        F.max("session_seq").alias("session_seq")
-    )
-    non_final = set(
-        map(
-            tuple,
-            batch.join(last_seq, ["user_id", "session_seq"], "left_anti")
-            .select(*sess_cols)
-            .collect(),
-        )
-    )
-    assert non_final <= got_tws <= all_sessions
-    assert non_final <= got_aip <= all_sessions
-    assert got_tws == got_aip
-
-
-class _FakeValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-    def clear(self):
-        self._v = None
-
-
-class _FakeHandle:
-    """Timer-faithful stand-in for StatefulProcessorHandle:
-    registerTimer ADDS (it does not replace), matching the real
-    transformWithState contract the advisor flagged."""
-
-    def __init__(self):
-        self.timers: list[int] = []
-        self._state = _FakeValueState()
-
-    def getValueState(self, name, schema):
-        return self._state
-
-    def registerTimer(self, ts):
-        self.timers.append(ts)
-
-    def deleteTimer(self, ts):
-        self.timers.remove(ts)
-
-    def listTimers(self):
-        return iter(list(self.timers))
-
-
-class _FakeTimerValues:
-    def __init__(self, watermark_ms):
-        self._wm = watermark_ms
-
-    def getCurrentWatermarkInMs(self):
-        return self._wm
-
-
-def test_tws_processor_timer_semantics_unit():
-    """Pure-Python drive of SessionProcessor (no protobuf needed):
-    (1) re-registration must not accumulate timers across batches,
-    (2) a stale timer firing after later events extended the session
-    must NOT flush the still-open tail early — only a timer whose
-    watermark has truly passed last + gap may emit. This is the
-    unit-level pin for the semantics the protobuf-gated streaming
-    equality test cannot check in this sandbox."""
-    import pandas as pd
-
-    from global_superstore_data_warehouse_spark.streaming.stateful import (
-        SESSION_GAP_SECONDS,
-    )
-    from global_superstore_data_warehouse_spark.streaming.stateful_tws import (
-        SessionProcessor,
-    )
-
-    proc = SessionProcessor()
-    handle = _FakeHandle()
-    proc.init(handle)
-
-    def feed(secs, vals, wm_ms):
-        batch = pd.DataFrame(
-            {
-                "sec": secs,
-                "event_id": range(len(secs)),
-                "value": vals,
-            }
-        )
-        return list(
-            proc.handleInputRows(
-                (7,), iter([batch]), _FakeTimerValues(wm_ms)
-            )
-        )
-
-    # batch 1: one open session (0..10); a timer is armed
-    out1 = feed([0, 10], [1.0, 2.0], wm_ms=0)
-    assert out1 == []
-    assert len(handle.timers) == 1
-    stale_timer = handle.timers[0]
-
-    # batch 2: events within the gap extend the SAME session; the
-    # old timer must be deleted, not accumulated
-    out2 = feed([100, 110], [3.0, 4.0], wm_ms=50_000)
-    assert out2 == []
-    assert len(handle.timers) == 1
-    assert handle.timers[0] != stale_timer
-    assert handle._state.get() == (0, 110, 4, 10.0)
-
-    # stale-timer race: even if the batch-1 timer somehow fired now
-    # (watermark 50s < last+gap = 710s), the open session must NOT
-    # be flushed. The runtime consumes the fired timer first —
-    # simulate that — and the guard must RE-ARM one (else an idle
-    # user's open session would never flush again: the round-8
-    # advisor's silent-loss finding).
-    handle.timers.clear()
-    fired = list(
-        proc.handleExpiredTimer((7,), _FakeTimerValues(50_000), None)
-    )
-    assert fired == []
-    assert handle._state.exists()
-    assert handle.timers == [(110 + SESSION_GAP_SECONDS) * 1000 + 1000]
-    # a repeated stale fire must not accumulate a duplicate timer
-    fired = list(
-        proc.handleExpiredTimer((7,), _FakeTimerValues(60_000), None)
-    )
-    assert fired == []
-    assert len(handle.timers) == 1
-
-    # a genuinely expired timer (watermark past last + gap) flushes
-    wm = (110 + SESSION_GAP_SECONDS) * 1000
-    fired = list(proc.handleExpiredTimer((7,), _FakeTimerValues(wm), None))
-    assert len(fired) == 1
-    row = fired[0].iloc[0]
-    assert (
-        row["session_start"],
-        row["session_end"],
-        row["n_events"],
-        row["sum_value"],
-    ) == (0, 110, 4, 10.0)
-    assert not handle._state.exists()

@@ -199,6 +199,44 @@ def test_spread_scan_noop_past_the_gate(spark, sf_dir, monkeypatch):
     assert "Exchange" not in _physical(df)
 
 
+def test_spread_scan_reads_size_string_conf(spark, sf_dir, monkeypatch):
+    """maxPartitionBytes is a size string: '1k' must move the gate (a
+    table of 4 KiB per slot spreads under the 128 MB default but not
+    under 1 KiB splits), and a malformed value must raise at plan
+    time rather than fall back to a default."""
+    import pytest
+
+    from global_superstore_data_warehouse_spark import catalog
+    from global_superstore_data_warehouse_spark.catalog import load
+    from global_superstore_data_warehouse_spark.operators import hints
+
+    key = "spark.sql.files.maxPartitionBytes"
+    docs = load(spark, sf_dir, "documents")
+    n = hints._session_parallelism(docs)
+    monkeypatch.setattr(catalog, "table_bytes", lambda d, t: 4096 * n)
+
+    def spread() -> DataFrame:
+        return hints.spread_scan(docs, sf_dir, "documents", by="doc_id")
+
+    assert "Exchange" in _physical(spread())
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "1k")
+        assert "Exchange" not in _physical(spread())
+    finally:
+        spark.conf.set(key, saved)
+    assert "Exchange" in _physical(spread())
+
+    # Spark refuses a malformed value at conf.set, so serve it from get
+    real_get = spark.conf.get
+    monkeypatch.setattr(
+        spark.conf, "get",
+        lambda k, *a: "12xyz" if k == key else real_get(k, *a),
+    )
+    with pytest.raises(Exception, match="xyz"):
+        spread()
+
+
 def test_cpu_repartition_pins_width_against_aqe(spark):
     """cpu_repartition must produce a user-specified repartition that
     AQE does not coalesce: after an action, the RDD partition count

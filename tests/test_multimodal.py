@@ -748,86 +748,3 @@ def test_audio_vad_silent_windows_are_inactive():
         for w in range(3)
     ]
     assert acts == [True, False, True]
-
-
-# --- image decode backend dispatch (round 11) -------------------------
-
-
-def test_image_backend_dispatch_and_fallback(monkeypatch):
-    """Backend selection contract: 'pure' forces the spec-derived
-    path (native decoder never called); 'pil' routes through
-    _pil_decode and falls back to pure when the native decode
-    declines (returns None); 'auto' without PIL resolves to pure."""
-    import numpy as np
-
-    from global_superstore_data_warehouse_spark.operators import multimodal as M
-
-    px = np.arange(4 * 3 * 3, dtype=np.uint8).reshape(3, 4, 3)
-    bmp = M.encode_bmp(4, 3, px)
-
-    # force pure: a booby-trapped native decoder must never run
-    monkeypatch.setattr(M, "_IMAGE_BACKEND", None)
-    monkeypatch.setenv("SPARK_GRAFT_IMAGE_BACKEND", "pure")
-    monkeypatch.setattr(
-        M, "_pil_decode",
-        lambda b: (_ for _ in ()).throw(AssertionError("native path used")),
-    )
-    assert (M.decode_image(bmp) == px).all()
-    assert M._image_backend() == "pure"
-
-    # force pil with a FAKE native decoder: dispatch must route to it
-    sentinel = np.full((3, 4, 3), 7, np.uint8)
-    monkeypatch.setattr(M, "_IMAGE_BACKEND", "pil")  # skip the import probe
-    monkeypatch.setattr(M, "_pil_decode", lambda b: sentinel)
-    assert (M.decode_image(bmp) == sentinel).all()
-
-    # native decoder declines (None) -> pure fallback decodes
-    monkeypatch.setattr(M, "_pil_decode", lambda b: None)
-    assert (M.decode_image(bmp) == px).all()
-
-    # DEFAULT (env unset) is PURE — the registered decode queries'
-    # oracles pin exact in-repo IDCT arithmetic, so native must be
-    # opt-in, never probed in silently
-    monkeypatch.setattr(M, "_IMAGE_BACKEND", None)
-    monkeypatch.delenv("SPARK_GRAFT_IMAGE_BACKEND", raising=False)
-    assert M._image_backend() == "pure"
-
-    # explicit auto probes: resolves to pil iff PIL is importable
-    monkeypatch.setattr(M, "_IMAGE_BACKEND", None)
-    monkeypatch.setenv("SPARK_GRAFT_IMAGE_BACKEND", "auto")
-    try:
-        import PIL  # noqa: F401
-
-        expected = "pil"
-    except ImportError:
-        expected = "pure"
-    assert M._image_backend() == expected
-
-
-def test_image_backend_pil_equivalence():
-    """When PIL IS importable: pixel-exact agreement with the pure
-    decoders on the lossless formats, stats-tolerance on JPEG (IDCT
-    rounding differs between implementations). Skipped in the
-    codec-less sandbox; green on any host with pillow installed."""
-    pytest.importorskip("PIL")
-    import numpy as np
-
-    from global_superstore_data_warehouse_spark.operators import multimodal as M
-    from global_superstore_data_warehouse_spark.operators.jpeg import (
-        encode_jpeg_baseline,
-    )
-
-    rng = np.random.default_rng(11)
-    px = rng.integers(0, 256, (9, 13, 3), np.uint8)
-    for blob in (
-        M.encode_bmp(13, 9, px),
-        M.encode_png(13, 9, px),
-    ):
-        pure = M.decode_image(blob)  # whatever the ambient backend is
-        native = M._pil_decode(blob)
-        assert native is not None and (native == pure).all()
-    flat = np.full((8, 8, 3), 100, np.uint8)
-    jpg = encode_jpeg_baseline(8, 8, flat, quant=1, grayscale=True)
-    native = M._pil_decode(jpg)
-    assert native is not None
-    assert abs(float(native.mean()) - 100.0) <= 2.0

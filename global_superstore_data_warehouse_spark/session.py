@@ -35,6 +35,14 @@ def session_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
       identically across engines (and the DuckDB oracle).
     - Arrow enabled for any pandas interop (similarity / multimodal
       operators use Arrow-batched pandas UDFs, never row-at-a-time).
+    - Codegen cache sized to the working set: Spark's default LRU of
+      100 compiled whole-stage classes is smaller than one pass of any
+      workload here (text_dedup needs 178 classes, elt_build about 300,
+      one round of the full query registry about 3,700), so every pass
+      evicted the last one's classes and recompiled them all with
+      Janino. 4096 entries hold a full-registry round; a repeated call
+      then compiles nothing, for about 21 MB more Metaspace. A static
+      conf: it takes effect only when it builds the JVM's first session.
     """
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", _cpus()))
@@ -51,6 +59,7 @@ def session_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         "spark.sql.parquet.aggregatePushdown": "true",
+        "spark.sql.codegen.cache.maxEntries": "4096",
         "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
         "spark.ui.enabled": "false",
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "16g"),
@@ -68,6 +77,15 @@ def get_spark(
     for k, v in session_confs(shuffle_partitions).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compiles this JVM has run so far (Spark's
+    ``CodegenMetrics`` compilation-time histogram count). The difference
+    over a repeated call is the number of generated classes the codegen
+    cache missed."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 TARGET_SHUFFLE_PARTITION_BYTES = 128 * 1024 * 1024

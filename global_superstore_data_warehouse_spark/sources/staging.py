@@ -94,17 +94,22 @@ def stage_append(
     empty-source (C3) guards. Returns the staged rowcount.
 
     The existence probe reads only the target's ``load_id=N``
-    partition directory — an O(1) metadata check, not a scan."""
-    spark = df.sparkSession
-    if check_not_empty and df.isEmpty():
-        raise EmptySourceError("There is no data in the source.")
+    partition directory — an O(1) metadata check, not a scan.
+
+    The empty-source guard reads the count the write observed, so it
+    costs no probe job. A zero-row partitioned append writes no
+    ``load_id=N`` directory, only the ``_SUCCESS`` marker, so the
+    load id stays free after the raise."""
     part_dir = f"{target_path.rstrip('/')}/load_id={load_id}"
-    if _fs_exists(spark, part_dir):
+    if _fs_exists(df.sparkSession, part_dir):
         raise AlreadyLoadedError(f"This data was already loaded (load_id={load_id}).")
-    return write_counted(
+    rows = write_counted(
         with_audit_cols(df, load_id),
         lambda w: w.mode("append").partitionBy("load_id").parquet(target_path),
     )
+    if check_not_empty and rows == 0:
+        raise EmptySourceError("There is no data in the source.")
+    return rows
 
 
 def read_load(spark: SparkSession, path: str, load_id: int) -> DataFrame:

@@ -9,10 +9,11 @@ import pytest
 from pyspark.sql import functions as F
 
 # Spark jobs one sf0.001 build runs: one per artifact written (with
-# AQE, one more per shuffle or broadcast stage) plus the staging guards.
-# A re-read count or a Spark-written audit row per step breaks it.
-FULL_BUILD_JOBS = 64
-INCREMENTAL_BUILD_JOBS = 41
+# AQE, one more per shuffle or broadcast stage). The staging guards run
+# no job. A re-read count, an emptiness probe or a Spark-written audit
+# row per step breaks it.
+FULL_BUILD_JOBS = 57
+INCREMENTAL_BUILD_JOBS = 39
 
 
 @contextlib.contextmanager
@@ -113,6 +114,9 @@ def test_staging_guards(spark, sf_dir, tmp_path, monkeypatch):
         stage_append(region, target, 1)  # C4: double-load guard
     with pytest.raises(EmptySourceError):
         stage_append(region.filter(F.lit(False)), target, 2)  # C3: empty source
+    # the empty append wrote no partition, so load 2 is still free
+    assert not os.path.exists(os.path.join(target, "load_id=2"))
+    assert stage_append(region, target, 2) == region.count()
 
 
 def test_csv_roundtrip_all_string(spark, sf_dir, tmp_path):

@@ -9,7 +9,10 @@ For each named registered query (plus the unregistered
   - builds the standard session (same get_spark as bench.py),
   - warms the JVM with one sf0.001 pass of the query,
   - times N noop-sink runs at $SPARK_GRAFT_SF_DIR (min reported) with
-    the query name as the job description,
+    the query name as the job description, and counts the codegen
+    compiles over those runs (nonzero after the warm pass means a
+    thrashing codegen cache, or generated code that changes from call
+    to call),
   - optionally (--plans DIR) writes ``DIR/<name>_<suffix>.txt`` with
     the ``explain("formatted")`` output — the artifact the judge
     diff-checks, and
@@ -46,6 +49,7 @@ def main() -> None:
     from global_superstore_data_warehouse_spark.plans.events import (
         event_transitions_pandas,
     )
+    from global_superstore_data_warehouse_spark.session import codegen_compiles
 
     spark = get_spark("gsdw-profile")
     qs = dict(registry.queries())
@@ -64,6 +68,7 @@ def main() -> None:
             except Exception as exc:  # warm failures are non-fatal
                 print(f"   (warm failed for {name}: {exc})")
         times = []
+        compiled = codegen_compiles(spark)
         for _ in range(args.runs):
             spark.sparkContext.setJobDescription(name)
             t0 = time.perf_counter()
@@ -72,7 +77,10 @@ def main() -> None:
             times.append(time.perf_counter() - t0)
             spark.sparkContext.setJobDescription(None)
         results[name] = min(times)
-        print(f"{name}: min={min(times):.3f}s  runs={[round(t,3) for t in times]}")
+        print(
+            f"{name}: min={min(times):.3f}s  runs={[round(t,3) for t in times]}"
+            f"  compiles={codegen_compiles(spark) - compiled}"
+        )
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
             df = qs[name](spark, args.sf)

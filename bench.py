@@ -62,6 +62,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 
 _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
@@ -441,53 +442,6 @@ BENCH_EXEMPT = {
 ROUNDS = 3
 
 
-class _ConcurrencySampler:
-    """Passive max-task-concurrency sampler (round 14, the r13
-    verdict's scaling-legibility item): the driver's low-core scaling
-    heuristic reads a ~1.0 wall ratio as "CPUs ignored" when the real
-    cause is a fixed-cost-dominated query that never has many tasks
-    in flight. Sampling the status tracker (~100 Hz, a couple of py4j
-    calls per poll, off-thread) during each HEADLINE timing records
-    the max number of concurrently ACTIVE tasks — a query whose max
-    concurrency is near the core count genuinely uses the cores; one
-    whose max is small (or 0: every stage finished under the sampling
-    horizon) is plan/fixed-cost bound and a flat low-core ratio is
-    expected, not suspicious. Reported per headline query in
-    BENCH_DETAIL (additions-only; the stdout contract line is
-    untouched)."""
-
-    def __init__(self, spark) -> None:
-        self._tracker = spark.sparkContext.statusTracker()
-        self.max_active = 0
-        self._stop = False
-        self._thread = None
-
-    def _poll(self) -> None:
-        while not self._stop:
-            try:
-                active = 0
-                for sid in self._tracker.getActiveStageIds():
-                    info = self._tracker.getStageInfo(sid)
-                    if info is not None:
-                        active += info.numActiveTasks
-                if active > self.max_active:
-                    self.max_active = active
-            except Exception:
-                pass  # tracker hiccups must never fail a timing
-            time.sleep(0.01)
-
-    def __enter__(self) -> "_ConcurrencySampler":
-        import threading
-
-        self._thread = threading.Thread(target=self._poll, daemon=True)
-        self._thread.start()
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self._stop = True
-        if self._thread is not None:
-            self._thread.join(timeout=1.0)
-
 # INHERENT-COST extras (round-12 decision, after three rounds of
 # re-profiling the same slowest-5): these queries' cost is the work
 # they exist to do, not a plan defect — BENCH_DETAIL carries this map
@@ -503,7 +457,7 @@ INHERENT_COST = {
     "video_frame_sample_stats": (
         "pure-Python JPEG IDCT per sampled frame is the documented "
         "per-core tax (codec constant already cut 2-3x in round 11); "
-        "only the opt-in native backend removes it"
+        "the pure-Python decoder is the only backend"
     ),
     "jaccard_prefix_pairs": (
         "exact-join GROUND TRUTH for the PPJoin pruning filters; the "
@@ -582,8 +536,22 @@ def _sf_from_dir(d: str) -> float:
         return -1.0
 
 
+def _timed_run(spark, fn) -> float:
+    """Seconds to build ``fn``'s DataFrame at SF_DIR and run it into a
+    noop sink. Construction, including any eager checkpoint of reused
+    frames, counts: it is real query work, not session setup."""
+    t0 = time.perf_counter()
+    fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
+
+
 def main() -> None:
     from global_superstore_data_warehouse_spark import get_spark, registry
+    from global_superstore_data_warehouse_spark.profiling import (
+        EventLog,
+        max_concurrency,
+        parse,
+    )
 
     spark = get_spark("gsdw-bench")
     from global_superstore_data_warehouse_spark.plans.events import (
@@ -664,25 +632,19 @@ def main() -> None:
                 and time.perf_counter() - t_start > budget_s * 1.4
             ):
                 continue
-            # construction (incl. any eager checkpoint of reused
-            # frames) counts toward the measured time: it is real
-            # query work, not session setup
             if sink is timings:
-                # headline runs carry the passive concurrency sampler
-                # (see _ConcurrencySampler) — max across rounds
-                with _ConcurrencySampler(spark) as cs:
-                    t0 = time.perf_counter()
-                    df = qs[name](spark, SF_DIR)
-                    df.write.format("noop").mode("overwrite").save()
-                    el = time.perf_counter() - t0
+                # headline timings run inside an event-log region; the
+                # peak task concurrency is computed from it afterwards
+                # (max across rounds)
+                with tempfile.TemporaryDirectory() as log_dir:
+                    with EventLog(spark, log_dir) as log:
+                        el = _timed_run(spark, qs[name])
+                    peak = max_concurrency(parse(log.events()).intervals)
                 headline_concurrency[name] = max(
-                    headline_concurrency.get(name, 0), cs.max_active
+                    headline_concurrency.get(name, 0), peak
                 )
             else:
-                t0 = time.perf_counter()
-                df = qs[name](spark, SF_DIR)
-                df.write.format("noop").mode("overwrite").save()
-                el = time.perf_counter() - t0
+                el = _timed_run(spark, qs[name])
             prev = sink.get(name)
             sink[name] = round(el if prev is None else min(prev, el), 3)
             if sink is extra_timings:
@@ -702,11 +664,7 @@ def main() -> None:
         if not pending:
             break
         for name in pending:
-            t0 = time.perf_counter()
-            qs[name](spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            el = time.perf_counter() - t0
+            el = _timed_run(spark, qs[name])
             extra_timings[name] = round(min(extra_timings[name], el), 3)
             extra_passes[name] = extra_passes.get(name, 0) + 1
 
@@ -763,10 +721,9 @@ def main() -> None:
         "queries": timings,
         "extra_queries": extra_timings,
         "extra_passes": extra_passes,
-        # max concurrently-active tasks observed per headline timing
-        # (round 14 — lets a flat low-core wall ratio be read as
-        # "fixed-cost-bound", not "CPUs ignored"; see
-        # _ConcurrencySampler)
+        # peak tasks running at once per headline query, over its
+        # timings: a flat low-core wall ratio with a low peak reads as
+        # "fixed-cost-bound", not "CPUs ignored"
         "headline_max_concurrency": headline_concurrency,
         "extras_budget_skipped": extra_skipped,
         "inherent_cost": {

@@ -10,7 +10,8 @@ star-CC rounds) dump the ROUND BODY's formatted plan when
 
 Zero cost on every normal path: without the env var ``dump_plan`` is
 a no-op (one dict lookup); the bench, the driver, and production
-never set it. ``tools/profile_query.py --round-plans`` sets it.
+never set it. ``tools/profile_query.py --plans DIR`` sets it to DIR
+for the one plan build it explains.
 """
 
 from __future__ import annotations

@@ -21,11 +21,9 @@ def _cpus() -> str:
 
 def session_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
     """THE session config dict — the single source the bench, the
-    driver entry, and every measurement tool build from (round-14,
-    ADVICE fix: tools/stageprof.py hand-copied this list, so any
-    future default change would silently diverge the measurement
-    session from the bench session). Resolves the same env knobs as
-    ``get_spark``.
+    driver entry, and every measurement tool build from, so a
+    measurement session never diverges from the bench session.
+    Resolves the same env knobs as ``get_spark``.
 
     - AQE on: runtime shuffle-partition coalescing, skew-join
       splitting, and dynamic join-strategy demotion to broadcast —

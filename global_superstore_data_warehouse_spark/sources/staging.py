@@ -84,12 +84,7 @@ def write_counted(df: DataFrame, write: Callable[[DataFrameWriter], None]) -> in
     return obs.get["rows"]
 
 
-def stage_append(
-    df: DataFrame,
-    target_path: str,
-    load_id: int,
-    check_not_empty: bool = True,
-) -> int:
+def stage_append(df: DataFrame, target_path: str, load_id: int) -> int:
     """Audited staged append (S2) with the idempotence (S3) and
     empty-source (C3) guards. Returns the staged rowcount.
 
@@ -107,7 +102,7 @@ def stage_append(
         with_audit_cols(df, load_id),
         lambda w: w.mode("append").partitionBy("load_id").parquet(target_path),
     )
-    if check_not_empty and rows == 0:
+    if rows == 0:
         raise EmptySourceError("There is no data in the source.")
     return rows
 

@@ -31,10 +31,13 @@ headline minima (the graded number) always get all three rounds.
 
 ``HEADLINE`` is frozen to the round-1 set: BASELINE.md defines the
 bar as 2x of the first recorded total over exactly these queries, so
-the total must stay apples-to-apples. Queries added to the bench
-later (iterative clustering, pandas-path transitions, ANN) are timed
-identically but reported under ``extra_queries`` and excluded from
-``value``.
+the total must stay apples-to-apples. Every other timed query is in
+``EXTRA``, timed identically but reported under ``extra_queries`` and
+excluded from ``value``. ``EXTRA`` is derived, not listed: every
+registered query, in registry order, that is in neither ``HEADLINE``
+nor ``BENCH_EXEMPT``, then the unregistered ``VARIANTS``. A new
+registration is timed unless it argues an exemption in
+``BENCH_EXEMPT``.
 
 HOST-SPEED CANARY: rounds 4-5 measured a compounding ~1.25x -> ~1.7x
 uniform slowdown on plan files untouched since round 1 — host decay,
@@ -48,7 +51,7 @@ SCALE.md) separates plan regressions from machine drift. DO NOT EDIT
 the canary bodies — their whole value is being identical forever.
 
 ``extra_passes`` annotates how many timing passes each extra query
-got (the budget gate can reduce late-alphabet extras to min-of-1 on
+got (the budget gate can reduce late-listed extras to min-of-1 on
 a contended host; a min-of-1 delta is noise, not a regression).
 Since round 9 the second pass runs slowest-first and the 15
 slowest extras (by first-pass time — a margin over the graded
@@ -76,6 +79,11 @@ os.environ["PYTHONPATH"] = (
     _REPO_ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 ).rstrip(os.pathsep)
 
+from global_superstore_data_warehouse_spark import get_spark, registry  # noqa: E402
+from global_superstore_data_warehouse_spark.plans.events import (  # noqa: E402
+    event_transitions_pandas,
+)
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Headline set (FROZEN — the BASELINE.md comparable): the flagship
@@ -95,263 +103,15 @@ HEADLINE = [
     "vocab_topk",
 ]
 
-# Extended set (reported, not in the baseline total): the iterative
-# label-propagation path, the grouped-applyInPandas path, the
-# bucketed-ANN path — the regressions round-1's headline set missed —
-# plus the round-3 curation/range-join additions.
-EXTRA = [
-    "dedup_clusters",
-    "event_transitions",
-    "ann_ivf_topk",
-    "repetition_stats",
-    "pack_chunks",
-    "asof_click_attribution",
-    "events_in_maintenance_windows",
-    "tfidf_topk_terms",
-    "curation_pipeline",
-    # round-4 additions: Bloom-prefiltered decontamination (vs the
-    # in-window broadcast-join plan), alternating-star CC (vs the
-    # min-contraction plan), distributed Lloyd k-means
-    "decontaminate_ngrams",
-    "decontaminate_bloom",
-    "dedup_clusters_smallstar",
-    "kmeans_assign",
-    # unregistered equivalence-tested variant: the grouped-pandas
-    # formulation of event_transitions, timed next to the registered
-    # JVM lag-window plan so the Arrow-round-trip cost stays visible
-    "event_transitions_pandas",
-    # mid-round-4 additions: batch-vs-corpus incremental dedup and
-    # the overlapping RAG chunker
-    "dedup_incremental",
-    "chunk_overlap",
-    # exact set-similarity join + incremental MV merge
-    "jaccard_prefix_pairs",
-    "incremental_mv_refresh",
-    # late-round-4 additions: corpus-level span dedup, the
-    # keep-decision pass after clustering, per-attribute survivorship,
-    # and the right-to-erasure cascade
-    "span_dup_stats",
-    "cluster_representatives",
-    "golden_record_customers",
-    "gdpr_erasure_cascade",
-    # profiler / gap-fill / semantic dedup / dedup-recall eval
-    "profile_columns",
-    "events_gapfill",
-    "semantic_dedup",
-    "minhash_recall_eval",
-    # iterative link analysis + schema discovery
-    "part_pagerank",
-    "fk_discovery",
-    # interval-overlap join, triangle census (dense-graph stressor),
-    # zero-shuffle bigram counting, TakeOrdered weighted sampling
-    "session_maintenance_overlap",
-    "copurchase_triangles",
-    "bpe_pair_counts",
-    "weighted_sample_topk",
-    # round-5 additions: unigram perplexity proxy, dedup economics,
-    # interval-union sweep-line, end-to-end entity resolution
-    "unigram_logprob_scores",
-    "dedup_savings_report",
-    "user_activity_coverage",
-    "entity_resolution_customers",
-    "part_skyline",
-    "cluster_balanced_sample",
-    "bigram_surprisal_scores",
-    "daily_user_sketch_rollup",
-    "copurchase_bfs_layers",
-    "daily_revenue_ewma",
-    "benford_order_totals",
-    # round-6 additions: exact integer allocation, the near-dup split
-    # leakage audit, the schema-evolution fill-rate report, and the
-    # real-BMP-decode pandas path (Arrow round-trip cost visible)
-    "market_budget_allocation",
-    "split_near_dup_leakage",
-    "schema_evolution_union",
-    "multimodal_decode_stats",
-    # banded Hamming near-dup + C4 boilerplate strip-and-rebuild +
-    # rolling-window exact-substring span dedup
-    "simhash_near_dup_pairs",
-    "boilerplate_strip",
-    "duplicate_span_islands",
-    # late-round-6 additions: the mergeable-sketch family (count-min
-    # frequency, binned quantiles, CMS join-size estimation, KMV
-    # distinct), int8-quantized ANN, the single-scan expectations
-    # suite, per-segment regression trend, real WAV decode
-    "countmin_heavy_hitters",
-    "quantile_sketch_rollup",
-    "join_size_estimate",
-    "daily_users_kmv",
-    "ann_int8_rerank",
-    "expectations_report",
-    "segment_revenue_trend",
-    "audio_decode_stats",
-    # round-7 additions: zone-map layout skipping evaluation (three
-    # window sorts + zone aggregates) and the BPE train/apply pair
-    # (iterative vocab-level merge loop; apply is train + one join)
-    "layout_skipping_eval",
-    "bpe_learn_merges",
-    "bpe_vocab_compression",
-    # PQ train->encode->ADC-scan loop; multi-touch time-decay
-    # attribution (keyed-equi-join + purchase-window normalization)
-    "ann_pq_adc",
-    "multitouch_attribution",
-    # DSIR hashed-n-gram selection (one corpus scan + 64-row model);
-    # IVFADC (cell pruning x residual PQ codes); containment audit
-    # (class collapse + rarest-token block, doc-sized output)
-    "dsir_importance_weights",
-    "ann_ivf_pq",
-    "superset_containment",
-    # COW transaction-log merge lifecycle (create -> file-pruned
-    # SCD1 merge -> snapshot audit; timing includes the table writes)
-    "cow_merge_upsert",
-    # margin-based bitext mining (broadcast side + two K-NN rank
-    # windows); k-anonymity release audit (two groupBys + one join)
-    "bitext_margin_mining",
-    "k_anonymity_audit",
-    # OPTIMIZE bin-packing planner (metadata-sized inventory)
-    "compaction_plan",
-    # temporal split leakage audit (per-user session windows)
-    "temporal_split_audit",
-    # BM25 ranked retrieval (broadcast query semi-join + integer sums)
-    "bm25_topk",
-    # one-scan sufficient-statistics correlation matrix; A/B z-test;
-    # contingency-table mutual information
-    "measure_correlations",
-    "ab_test_report",
-    "mutual_information",
-    # streamed COW ingestion lifecycle (3 availableNow drains)
-    "cow_stream_upsert",
-    # CCNet per-language perplexity thirds (corpus-LM rank window)
-    "ccnet_perplexity_buckets",
-    # round-8 additions: UniMax waterfilling budgets (two L-row
-    # windows over one corpus aggregate), the driver-gated
-    # stream-stream interval join (one availableNow drain included),
-    # graded NDCG/MRR ranking eval (three ANN searches), and B-cubed
-    # agreement between the simhash and minhash clusterings (two
-    # full dedup passes + connected components)
-    "unimax_language_budgets",
-    "stream_interval_join_attribution",
-    "retrieval_ndcg_eval",
-    "dedup_bcubed_agreement",
-    # stream-static broadcast enrichment + streamed exactly-once
-    # dedup over a duplicated feed (one drain + one staging write)
-    "stream_static_enrichment",
-    "stream_dedup_exactly_once",
-    # exact P50/P95/P99 by histogram-refinement selection (the
-    # refinement loop engages at sf0.1: 600k rows > the 100k narrow
-    # threshold, so the timing includes real multi-pass narrowing)
-    "exact_percentile_twopass",
-    # embedding-space split-leakage audit (the semantic dedup pass
-    # plus two split-label joins and a 3-row roll-up)
-    "split_semantic_leakage",
-    # consistent-hash ring rebalance audit (two array-literal
-    # successor projections + one n_workers-row groupBy)
-    "consistent_shard_rebalance",
-    # exact two-sample KS drift (one pre-agg + one cumulative window)
-    "ks_drift_statistic",
-    # exact chi-squared categorical drift (one ~5-row pre-agg)
-    "chisq_category_drift",
-    # KMV theta-sketch audience overlap (salted k-min + tiny pair join)
-    "kmv_audience_overlap",
-    # two-pass sorted-neighborhood ER blocking (rank + window join)
-    "sorted_neighborhood_pairs",
-    # greedy k-center coreset (K scans, scalar-only collects)
-    "kcenter_coreset",
-    # Kaplan-Meier survival (one corpus groupBy + tiny fold)
-    "kaplan_meier_churn",
-    # TPC-H Q17 decorrelation shape (pre-agg + join-back)
-    "tpch_avg_yearly",
-    # per-node clustering coefficients (oriented triangle corners)
-    "clustering_coefficients",
-    # RRF fusion of the two ANN indexes (integer rank scoring)
-    "rank_fusion_rrf",
-    # Shapley channel attribution (one scan + constant-size algebra)
-    "shapley_channel_attribution",
-    # price/volume/mix bridge (one fact shuffle + tiny projection)
-    "price_volume_mix",
-    # quantile normalization (two ranks + one equi-join)
-    "quantile_normalization",
-    # LOO target encoding (one scan + broadcast group stats)
-    "target_encoding_loo",
-    # Poisson bootstrap CI (explode(B) scan + B-row rank)
-    "bootstrap_revenue_ci",
-    # bounded-peel k-core (R node-set semi-join rounds)
-    "kcore_membership",
-    # per-segment Gini (segment-partitioned windows, one agg)
-    "revenue_gini",
-    # CUSUM changepoint (one pre-agg + day-count window + top-1)
-    "cusum_changepoint",
-    # winnowing fingerprints (zero-shuffle explodes + min-struct agg)
-    "winnowing_matches",
-    # round-10: the final 16 rotation-queue queries previously absent
-    # here — every registered-and-windowed query now reports a timing
-    # (bpe_pair_counts was already present above)
-    "hard_negative_mining",
-    "lang_id_confusion",
-    "pareto_products",
-    "rfm_segments",
-    "zipf_slope_by_source",
-    "token_entropy_by_source",
-    "events_dedup_bursts",
-    "doclen_histogram",
-    "order_cadence",
-    "churn_flags",
-    "supplier_concentration",
-    "fulfillment_lead_time",
-    "quality_percentiles",
-    "seasonal_index",
-    "lateness_profile",
-    "abc_migration",
-    # round-10 net-zero-rule registration: the merge-on-read twin
-    "mor_merge_upsert",
-    # late round-10 additions (windowed immediately): real video
-    # decode, audio feature extraction, .warc.gz ingestion
-    "video_frame_sample_stats",
-    "audio_vad_features",
-    "warc_ingest_stats",
-    "tfrecord_ingest_stats",
-    "webdataset_ingest_stats",
-    "avro_ingest_stats",
-    "arrow_ipc_ingest_stats",
-    "cow_change_feed",
-    "mor_change_feed",
-    # round-11 net-zero-rule registrations: sketch error-bound audit
-    # twins + the threshold-scheduled MOR compaction table service
-    "daily_user_sketch_rollup_audit",
-    "events_hourly_approx_users_audit",
-    "mor_compaction_policy",
-    # round-13 bench-coverage closure (the r12 verdict's "What's
-    # wrong" #1): a one-pass sf0.1 timing of every registered query
-    # NOT yet benched found these 14 above 1.5 s — real enough cost
-    # that leaving them untimed was the silent-skip risk the
-    # directive named. Everything cheaper is in BENCH_EXEMPT below
-    # with its measured time; tests/test_driver_contract.py now
-    # asserts registry == HEADLINE ∪ EXTRA ∪ BENCH_EXEMPT.
-    "fuzzy_name_match",
-    "simhash_recall_eval",
-    "crossmodal_near_dup",
-    "embedding_near_dup",
-    "ngram_jaccard_pairs",
-    "ann_recall",
-    "dim_address",
-    "ann_lsh_topk",
-    "market_basket_pairs",
-    "fuzzy_match_fastss",
-    "multimodal_features",
-    "best_month_per_segment",
-    "events_hourly_approx_users",
-    "case_insensitive_segments",
-]
-
 # Registered queries DELIBERATELY not benched, each with the
 # single-pass sf0.1 time measured when the decision was made (round
 # 13, warm session, local[32]) and why timing it per-round adds no
 # signal: these are fixed-cost-dominated micro-plans (session + plan
 # construction + a scan and at most one or two small shuffles) whose
 # operator shapes are already timed through a heavier benched query.
-# tests/test_driver_contract.py asserts every registered query is
-# HEADLINE ∪ EXTRA ∪ this dict, so a new registration MUST either be
-# benched or argue its exemption here explicitly.
+# EXTRA below is derived from the registry minus HEADLINE and this
+# dict, so a new registration is timed by default; leaving one untimed
+# takes an exemption argued here, with its measured time.
 BENCH_EXEMPT = {
     # -- 1.0-1.5 s: light but shape-covered by a benched twin --
     "rolling_7d_sales": "1.44 s at sf0.1 (r13); rolling day-range window over a daily pre-agg — window-over-days shape benched via daily_revenue_ewma",
@@ -438,6 +198,16 @@ BENCH_EXEMPT = {
     "pii_pseudonymize_customers": "0.11 s at sf0.1 (r13); sha2 pseudonymization projection — no shuffle",
     "stratified_sample": "0.10 s at sf0.1 (r13); per-stratum hash-ordered sample — fixed cost",
 }
+
+# Unregistered equivalence twins, timed next to their registered plans:
+# the grouped-pandas formulation of event_transitions keeps its
+# Arrow-round-trip cost visible beside the JVM lag-window plan.
+VARIANTS = {"event_transitions_pandas": event_transitions_pandas}
+
+# Extended set: reported, not in the baseline total.
+EXTRA = [
+    n for n in registry.queries() if n not in HEADLINE and n not in BENCH_EXEMPT
+] + list(VARIANTS)
 
 ROUNDS = 3
 
@@ -546,7 +316,6 @@ def _timed_run(spark, fn) -> float:
 
 
 def main() -> None:
-    from global_superstore_data_warehouse_spark import get_spark, registry
     from global_superstore_data_warehouse_spark.profiling import (
         EventLog,
         max_concurrency,
@@ -554,14 +323,7 @@ def main() -> None:
     )
 
     spark = get_spark("gsdw-bench")
-    from global_superstore_data_warehouse_spark.plans.events import (
-        event_transitions_pandas,
-    )
-
-    qs = dict(registry.queries())
-    qs["event_transitions_pandas"] = event_transitions_pandas
-    names = [n for n in HEADLINE if n in qs]
-    extra_names = [n for n in EXTRA if n in qs]
+    qs = {**registry.queries(), **VARIANTS}
 
     # Warm-up (not timed): JVM + parquet footers, plus one tiny-SF
     # pass over each HEADLINE query so whole-stage codegen is JIT'd
@@ -572,7 +334,7 @@ def main() -> None:
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
     warm_sf = "/root/testdata/sf0.001"
     if os.path.isdir(warm_sf):
-        for name in names:
+        for name in HEADLINE:
             try:
                 qs[name](spark, warm_sf).write.format("noop").mode("overwrite").save()
             except Exception:
@@ -597,10 +359,10 @@ def main() -> None:
         # as a plan regression — with the second pass budget-gated
         # so a contended host degrades to min-of-1 instead of
         # overrunning the harness timeout
-        batch = [(n, timings) for n in names]
+        batch = [(n, timings) for n in HEADLINE]
         guaranteed: set[str] = set()
         if rnd == 0:
-            batch += [(n, extra_timings) for n in extra_names]
+            batch += [(n, extra_timings) for n in EXTRA]
         elif rnd == ROUNDS - 1:
             # Second pass runs SLOWEST-FIRST (by first-pass timing),
             # and the slowest are exempt from the budget gate:
@@ -608,7 +370,7 @@ def main() -> None:
             # they must always be min-of-2 (round-8 lesson — a whole
             # round of min-of-1 extras deltas was ungradeable noise).
             ordered = sorted(
-                extra_names, key=lambda n: -extra_timings.get(n, 0.0)
+                EXTRA, key=lambda n: -extra_timings.get(n, 0.0)
             )
             # guarantee 15, not 10: ranking here uses FIRST-pass
             # times, but the graded top-10 is by final min — minima
@@ -673,7 +435,7 @@ def main() -> None:
     # 147 never got a first pass at loadavg 4). Report WHO was
     # dropped — a missing timing must read as "skipped under load",
     # never as "covered".
-    extra_skipped = sorted(n for n in extra_names if n not in extra_timings)
+    extra_skipped = sorted(n for n in EXTRA if n not in extra_timings)
     try:
         load1 = round(os.getloadavg()[0], 2)
     except OSError:

@@ -21,12 +21,20 @@ side's stragglers (FIFO scheduling is exactly the back-fill behavior
 wanted). Results are deterministic: the sides share no mutable state
 and the final join consumes both frames only after both threads have
 returned.
+
+Each thunk runs with the caller's Spark local properties (job group,
+job description, scheduler pool): the jobs it submits belong to the
+caller's job group, so ``getJobIdsForGroup`` counts them and
+``cancelJobGroup`` reaches them.
 """
 
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, TypeVar
+
+from pyspark import inheritable_thread_target
+from pyspark.sql import SparkSession
 
 T = TypeVar("T")
 
@@ -38,9 +46,17 @@ def build_concurrently(*thunks: Callable[[], T]) -> list[T]:
     all of them), so a failure does not cut the other builds short.
     When thunks fail, the exception raised is that of the first-listed
     failing thunk, whichever failed first in time.
+
+    With an active Spark session, each thunk is wrapped in the
+    caller's thread so its thread inherits the caller's local
+    properties; without one, the thunks run unwrapped.
     """
     if len(thunks) <= 1:
         return [t() for t in thunks]
+    session = SparkSession.getActiveSession()
+    if session is not None:
+        inherit = inheritable_thread_target(session)
+        thunks = tuple(inherit(t) for t in thunks)
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(t) for t in thunks]
         return [f.result() for f in futures]

@@ -309,65 +309,6 @@ def priority_distribution_oracle() -> str:
     """
 
 
-# --- incremental view maintenance ------------------------------------
-
-def yearly_sales_profit_acc(spark: SparkSession, sf_dir: str, year_pred=None) -> DataFrame:
-    """Accumulator form of yearly_sales_profit: UNROUNDED additive
-    sums (+ row count). Stored materialized views keep this form so a
-    delta load merges by addition; rounding happens only at
-    presentation (present_yearly_sales). This is what makes REFRESH
-    incremental at 100 TB: cost ∝ delta, not table."""
-    lineitem = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", F.year("o_orderdate").alias("order_year")
-    )
-    if year_pred is not None:
-        orders = orders.filter(year_pred(F.col("order_year")))
-    cust_market = _customer_market(spark, sf_dir).select("c_custkey", "market")
-    orders = _stats_gated(orders, sf_dir, "orders")
-    return (
-        lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust_market), orders.o_custkey == cust_market.c_custkey)
-        .groupBy("order_year", "market")
-        .agg(
-            F.sum(SALES()).alias("sum_sales"),
-            F.sum(PROFIT()).alias("sum_profit"),
-            F.sum("l_quantity").alias("sum_qty"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-    )
-
-
-def merge_view_delta(old: DataFrame, delta: DataFrame) -> DataFrame:
-    """Incremental REFRESH: combine a stored accumulator view with a
-    delta-load accumulator by re-aggregating their union — additive
-    measures merge exactly; group keys absent from the delta pass
-    through untouched."""
-    return (
-        old.unionByName(delta)
-        .groupBy("order_year", "market")
-        .agg(
-            F.sum("sum_sales").alias("sum_sales"),
-            F.sum("sum_profit").alias("sum_profit"),
-            F.sum("sum_qty").alias("sum_qty"),
-            F.sum("n_rows").alias("n_rows"),
-        )
-    )
-
-
-def present_yearly_sales(acc: DataFrame) -> DataFrame:
-    """Presentation pass over the accumulator view (rounding,
-    ordering) — the only place ROUND appears, so accumulators stay
-    mergeable."""
-    return acc.select(
-        "order_year",
-        "market",
-        F.round("sum_sales", 2).alias("total_sales"),
-        F.round("sum_profit", 2).alias("total_profit"),
-        F.col("sum_qty").cast("long").alias("total_quantity"),
-    ).orderBy("order_year", "market")
-
-
 # --- TPC-H decorrelation shapes (Q17 / Q13) ----------------------------
 
 AVG_YEARLY_SIZE_CAP = 10  # part-size slice (Q17's brand+container analogue)

@@ -7,9 +7,8 @@ nothing. Nothing polls while the region runs; ``parse`` and
 ``max_concurrency`` do all the arithmetic from the logged records
 after the clock has stopped.
 
-Events are attributed by region, not by job group: jobs submitted from
-``operators.par.build_concurrently`` threads do not inherit the
-caller's ``setJobGroup`` tag, but the region logs them like any other.
+Events are attributed by region, not by job group: the region logs
+every job the session runs inside it, whichever thread submitted it.
 """
 
 from __future__ import annotations

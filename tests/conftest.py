@@ -17,6 +17,9 @@ TABLES = (
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
+    # bound the heap below session_confs' 16g default: the contract
+    # test's bench JVM runs beside this one, on a 15 GB host
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "4g")
     os.environ.setdefault("SPARK_SHUFFLE_PARTITIONS", "4")
     from global_superstore_data_warehouse_spark import get_spark
 

@@ -164,8 +164,9 @@ def test_correctness_window_is_the_intended_fifty():
 
 def test_bench_covers_every_registered_query():
     """Bench-coverage contract (round-12 verdict, 'What's wrong' #1):
-    bench.py's EXTRA list is hand-maintained, so without this test a
-    future registration could silently never get timed. Every
+    bench.py derives EXTRA from the registry minus HEADLINE and
+    BENCH_EXEMPT, plus its declared VARIANTS; this test pins the
+    result, so no registration can silently go untimed. Every
     registered query must be HEADLINE, EXTRA, or BENCH_EXEMPT — and
     an exemption must carry a real one-line reason."""
     sys.path.insert(0, REPO)

@@ -3,6 +3,8 @@ records (no Spark), and one region recorded on the live test session."""
 
 import os
 
+import pytest
+
 from global_superstore_data_warehouse_spark.profiling import (
     EventLog,
     max_concurrency,
@@ -87,8 +89,11 @@ def test_parse_counts_ran_stages_and_every_task_end():
     assert max_concurrency(region.intervals) == 2
 
 
-def test_region_logs_exactly_its_own_jobs(spark, sf_dir, tmp_path):
-    from global_superstore_data_warehouse_spark.plans.views import yearly_sales_profit
+# minhash_lsh_candidates submits jobs from operators.par threads: its
+# region's jobs must all carry the caller's job group too
+@pytest.mark.parametrize("name", ["yearly_sales_profit", "minhash_lsh_candidates"])
+def test_region_logs_exactly_its_own_jobs(spark, sf_dir, tmp_path, name):
+    from global_superstore_data_warehouse_spark import registry
 
     sc = spark.sparkContext
     bus = sc._jsc.sc().listenerBus()
@@ -100,18 +105,21 @@ def test_region_logs_exactly_its_own_jobs(spark, sf_dir, tmp_path):
         ]
 
     assert event_loggers() == []
-    sc.setJobGroup("profiling-region", "profiling-region")
+    # group names unique per case: the status tracker keeps earlier
+    # cases' jobs under their groups
+    region_group, after_group = f"{name}-region", f"{name}-after"
+    sc.setJobGroup(region_group, region_group)
     try:
         with EventLog(spark, str(tmp_path)) as log:
-            yearly_sales_profit(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        sc.setJobGroup("profiling-after", "profiling-after")
+            registry.queries()[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        sc.setJobGroup(after_group, after_group)
         spark.range(10).count()
     finally:
         sc._jsc.clearJobGroup()
     region = parse(log.events())
     tracker = sc.statusTracker()
-    assert set(region.jobs) == set(tracker.getJobIdsForGroup("profiling-region"))
-    assert not set(region.jobs) & set(tracker.getJobIdsForGroup("profiling-after"))
+    assert set(region.jobs) == set(tracker.getJobIdsForGroup(region_group))
+    assert not set(region.jobs) & set(tracker.getJobIdsForGroup(after_group))
     assert region.counters()["tasks"] >= len(region.jobs) > 0
     assert 1 <= max_concurrency(region.intervals) <= int(os.environ["SPARK_GRAFT_CPUS"])
     assert event_loggers() == []

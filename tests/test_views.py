@@ -29,31 +29,3 @@ def test_entry_smoke(spark):
     assert len(rows) > 0
     assert {"order_year", "market", "total_sales"} <= set(df.columns)
 
-
-def test_incremental_view_refresh_equals_full_recompute(spark, sf_dir):
-    """Merging per-load accumulator deltas must reproduce the full
-    recompute exactly (unrounded-sum merge is associative here: the
-    per-group double summation runs in the same partial-agg order)."""
-    from pyspark.sql import functions as F
-
-    from global_superstore_data_warehouse_spark.catalog import load
-    from global_superstore_data_warehouse_spark.plans.views import (
-        merge_view_delta,
-        present_yearly_sales,
-        yearly_sales_profit,
-        yearly_sales_profit_acc,
-    )
-
-    years = sorted(
-        r.y
-        for r in load(spark, sf_dir, "orders")
-        .select(F.year("o_orderdate").alias("y"))
-        .distinct()
-        .collect()
-    )
-    split = years[len(years) // 2]
-    old = yearly_sales_profit_acc(spark, sf_dir, lambda y: y <= split)
-    delta = yearly_sales_profit_acc(spark, sf_dir, lambda y: y > split)
-    merged = present_yearly_sales(merge_view_delta(old, delta))
-    full = yearly_sales_profit(spark, sf_dir)
-    assert merged.collect() == full.collect()

@@ -10,7 +10,8 @@ transactions. Each step costs one Spark job per artifact written
 (plus the staging guards): the rowcount it returns and audits is the
 write's own observed metric (``staging.write_counted``), and its audit
 row is driver-side metadata (``audit.log_step``), like the load-id
-file — neither re-reads nor writes through Spark.
+file — neither re-reads nor writes through Spark. Each audit row also
+carries the step's own cost: the driver's wall time around its write.
 
 Physical layout decisions (100 TB-oriented):
 - staged sources partitioned by load_id (incremental appends prune);
@@ -25,6 +26,7 @@ Physical layout decisions (100 TB-oriented):
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -41,6 +43,11 @@ from global_superstore_data_warehouse_spark.sources.staging import (
 STAGED_TABLES = ("orders", "lineitem", "customer", "supplier", "part", "nation", "region")
 
 
+def _ms_since(t0: float) -> int:
+    """Whole milliseconds since the ``time.perf_counter()`` stamp ``t0``."""
+    return round((time.perf_counter() - t0) * 1000)
+
+
 def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, int]:
     """Full warehouse build; returns per-artifact rowcounts."""
     log_path = os.path.join(out_dir, "etl_log")
@@ -50,13 +57,15 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, in
     seq = LoadIdSequencer(os.path.join(out_dir, "_meta", "load_id.json"))
     load_id = seq.next()
     for t in STAGED_TABLES:
+        t0 = time.perf_counter()
         n = stage_append(load(spark, sf_dir, t), os.path.join(out_dir, "staging", t), load_id)
         counts[f"staging.{t}"] = n
-        log_step(spark, log_path, f"stage_{t}", n, "staged", load_id)
+        log_step(spark, log_path, f"stage_{t}", n, "staged", load_id, _ms_since(t0))
 
     # --- E2: 3NF build (dims in dependency order, then fact) ---
     def write_table(df: DataFrame, name: str, partition_by: str | None = None) -> int:
         path = os.path.join(out_dir, name)
+        t0 = time.perf_counter()
         n = write_counted(
             df,
             lambda w: (w.partitionBy(partition_by) if partition_by else w)
@@ -64,7 +73,7 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, in
             .parquet(path),
         )
         counts[name] = n
-        log_step(spark, log_path, name, n, "loaded", load_id)
+        log_step(spark, log_path, name, n, "loaded", load_id, _ms_since(t0))
         return n
 
     write_table(warehouse.dim_market(spark, sf_dir), "3nf/dim_market")
@@ -117,16 +126,21 @@ def run_incremental_pipeline(
     for label, ord_pred, year_pred in slices:
         load_id = seq.next()
         ord_slice = orders.filter(ord_pred)
+        t0 = time.perf_counter()
         n = stage_append(
             ord_slice, os.path.join(out_dir, "staging_inc", "orders"), load_id
         )
         counts[f"{label}.orders"] = n
-        log_step(spark, log_path, f"stage_inc_orders_{label}", n, "staged", load_id)
+        log_step(
+            spark, log_path, f"stage_inc_orders_{label}", n, "staged", load_id,
+            _ms_since(t0),
+        )
 
         fact_slice = full_fact.filter(
             F.col("order_year").isin([y for y in years if year_pred(y)])
         )
         # dynamic overwrite: only this load's year directories rewrite
+        t0 = time.perf_counter()
         counts[f"{label}.fact_rows"] = write_counted(
             fact_slice,
             lambda w: w.mode("overwrite")
@@ -136,7 +150,7 @@ def run_incremental_pipeline(
         )
         log_step(
             spark, log_path, f"fact_inc_{label}", counts[f"{label}.fact_rows"],
-            "loaded", load_id,
+            "loaded", load_id, _ms_since(t0),
         )
 
     counts["fact_total"] = spark.read.parquet(fact_path).count()

@@ -19,6 +19,18 @@ def _cpus() -> str:
     return os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
 
 
+# HotSpot's JDK 17 tier-4 (C2) compile thresholds, and the factor this
+# package raises them by (see ``session_confs``). Tiers 1-3 (C1) keep
+# their defaults.
+TIER4_DEFAULTS = {
+    "Tier4InvocationThreshold": 5000,
+    "Tier4MinInvocationThreshold": 600,
+    "Tier4CompileThreshold": 15000,
+    "Tier4BackEdgeThreshold": 40000,
+}
+TIER4_FACTOR = 10
+
+
 def session_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
     """THE session config dict — the single source the bench, the
     driver entry, and every measurement tool build from, so a
@@ -41,6 +53,19 @@ def session_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
       Janino. 4096 entries hold a full-registry round; a repeated call
       then compiles nothing, for about 21 MB more Metaspace. A static
       conf: it takes effect only when it builds the JVM's first session.
+    - Tier-4 (C2) JIT thresholds raised ``TIER4_FACTOR`` times. In a
+      fresh JVM, one sf0.01 ``elt_build`` pass spent 17.8 s of CPU in
+      HotSpot's compiler threads against 5.3 s in executor tasks: 1,635
+      C2 compiles (26.9 s of compiler time in JFR), only 1.7 s of it on
+      Spark's generated classes, the rest on Janino, Catalyst, the JDK,
+      Kryo and Scala code that is hot for a few seconds, then idles.
+      At x10 that code stays C1-compiled for a short pass while loops
+      that really are hot still reach C2 (an sf0.1 lineitem scan
+      crosses 400k back-edges in its first round); the pass's CPU fell
+      about a quarter. C1 only (``TieredStopAtLevel=1``) saved more
+      CPU but ran the sf0.1 headline 2.1x slower. SCALE.md has the
+      measurements. A JVM option: it takes effect only when this
+      package launches the driver JVM.
     """
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", _cpus()))
@@ -61,6 +86,10 @@ def session_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
         "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
         "spark.ui.enabled": "false",
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "16g"),
+        "spark.driver.extraJavaOptions": " ".join(
+            f"-XX:{flag}={default * TIER4_FACTOR}"
+            for flag, default in TIER4_DEFAULTS.items()
+        ),
     }
 
 
@@ -84,6 +113,14 @@ def codegen_compiles(spark: SparkSession) -> int:
     cache missed."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def jit_compile_ms(spark: SparkSession) -> int:
+    """Milliseconds the driver JVM's JIT compilers have spent so far
+    (C1 and C2, summed over compiler threads). The difference over a
+    call is the HotSpot compile time that call triggered."""
+    mx = spark._jvm.java.lang.management.ManagementFactory
+    return int(mx.getCompilationMXBean().getTotalCompilationTime())
 
 
 TARGET_SHUFFLE_PARTITION_BYTES = 128 * 1024 * 1024

@@ -1,5 +1,5 @@
 """Audit-log sink (S9/C7): one row per pipeline step — procedure
-name, rowcount, message, load_id, timestamp — appended to a parquet
+name, rowcount, message, load_id, timestamp, duration — appended to a parquet
 log table (InsertLog, /root/reference/Database/BL_3NF/bl_3nf.sql:23-35
 and dm_InsertLog, bl_dm.sql:23-35).
 
@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 LOG_SCHEMA = (
     "procedure_name string, rows_affected long, message string, "
-    "load_id long, logged_at timestamp"
+    "load_id long, logged_at timestamp, duration_ms long"
 )
 
 # LOG_SCHEMA as pyarrow writes it. A UTC-adjusted timestamp makes Spark
@@ -35,6 +35,7 @@ _ARROW_SCHEMA = pa.schema(
         ("message", pa.string()),
         ("load_id", pa.int64()),
         ("logged_at", pa.timestamp("us", tz="UTC")),
+        ("duration_ms", pa.int64()),
     ]
 )
 
@@ -46,7 +47,10 @@ def log_step(
     rows_affected: int,
     message: str,
     load_id: int,
+    duration_ms: int,
 ) -> None:
+    """Append one step's row; ``duration_ms`` is the step's wall time
+    as its caller measured it on the driver."""
     del spark  # kept for callers: the row is written on the driver
     row = pa.Table.from_pylist(
         [
@@ -56,6 +60,7 @@ def log_step(
                 "message": message,
                 "load_id": load_id,
                 "logged_at": datetime.datetime.now(datetime.timezone.utc),
+                "duration_ms": duration_ms,
             }
         ],
         schema=_ARROW_SCHEMA,

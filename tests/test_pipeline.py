@@ -73,10 +73,15 @@ def test_pipeline_end_to_end(spark, sf_dir, tmp_path):
     assert log.schema == StructType.fromDDL(LOG_SCHEMA)
     assert log.count() == len(counts)
     assert log.filter(F.col("rows_affected") <= 0).count() == 0
-    assert {r.procedure_name: r.rows_affected for r in log.collect()} == {
+    rows = log.collect()
+    assert {r.procedure_name: r.rows_affected for r in rows} == {
         (f"stage_{k.split('.', 1)[1]}" if k.startswith("staging.") else k): n
         for k, n in counts.items()
     }
+    # each row carries its step's own wall time; the fact build is a
+    # join and a partitioned write, never 0 ms
+    assert all(r.duration_ms >= 0 for r in rows)
+    assert {r.procedure_name: r.duration_ms for r in rows}["3nf/fct_orders"] > 0
 
 
 def test_staging_guards(spark, sf_dir, tmp_path, monkeypatch):

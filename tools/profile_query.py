@@ -14,7 +14,8 @@ For each named registered query (plus the unregistered
     the query name as the job description, and counts the codegen
     compiles over those runs (nonzero after the warm pass means a
     thrashing codegen cache, or generated code that changes from call
-    to call),
+    to call) and the milliseconds HotSpot's JIT compilers spent in
+    them (``jit_ms``),
   - with --stages, records each timed run in a Spark event log
     (``profiling.EventLog``) and prints, after the run, its counters,
     its peak task concurrency and a per-job / per-stage table: wall
@@ -93,7 +94,10 @@ def main() -> None:
         event_transitions_pandas,
     )
     from global_superstore_data_warehouse_spark.profiling import EventLog, parse
-    from global_superstore_data_warehouse_spark.session import codegen_compiles
+    from global_superstore_data_warehouse_spark.session import (
+        codegen_compiles,
+        jit_compile_ms,
+    )
 
     spark = get_spark("gsdw-profile")
     qs = dict(registry.queries())
@@ -113,7 +117,7 @@ def main() -> None:
                 print(f"   (warm failed for {name}: {exc})")
         times = []
         regions = []
-        compiled = codegen_compiles(spark)
+        compiled, jit_ms = codegen_compiles(spark), jit_compile_ms(spark)
         for _ in range(args.runs):
             spark.sparkContext.setJobDescription(name)
             with tempfile.TemporaryDirectory() as log_dir:
@@ -130,6 +134,7 @@ def main() -> None:
         print(
             f"{name}: min={min(times):.3f}s  runs={[round(t,3) for t in times]}"
             f"  compiles={codegen_compiles(spark) - compiled}"
+            f"  jit_ms={jit_compile_ms(spark) - jit_ms}"
         )
         for i, region in enumerate(regions):
             print(f"  run {i}: {times[i]:.3f}s")

@@ -240,11 +240,6 @@ INHERENT_COST = {
         "dense co-purchase graph; the ordering already minimizes "
         "wedge count"
     ),
-    "dedup_clusters_smallstar": (
-        "alternating large-star/small-star rounds to convergence; "
-        "per-round one shuffle is optimal for connected components "
-        "without a driver-side union-find"
-    ),
     "stream_interval_join_attribution": (
         "round-14 profiling (per-microbatch durationMs): ONE "
         "availableNow drain, but the stream-stream join runs two "

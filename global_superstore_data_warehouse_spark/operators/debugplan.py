@@ -5,7 +5,7 @@ query shows only the post-checkpoint projection (8-13 lines), so the
 per-round join strategy — the thing the broadcast gates actually
 change — was invisible in the committed plan dumps. This hook lets
 the iterative loops (PageRank rounds, k-core peels, BFS hops, the
-star-CC rounds) dump the ROUND BODY's formatted plan when
+connected-components levels) dump the ROUND BODY's formatted plan when
 ``SPARK_GRAFT_PLAN_DIR`` is set.
 
 Zero cost on every normal path: without the env var ``dump_plan`` is

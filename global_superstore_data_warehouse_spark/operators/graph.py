@@ -1,51 +1,40 @@
-"""Distributed connected components — alternating large-star /
-small-star (Kiveris et al., "Connected Components in MapReduce and
-Beyond", SoCC'14).
+"""Distributed connected components by iterative min-contraction over
+a hashed node order — the one component operator behind the dedup
+endgame (``textops.dedup_clusters``), the simhash side of
+``dedup_bcubed_agreement`` and ``entity_resolution_customers``.
 
-A generic graph operator the dedup layer plugs into (the in-window
-``dedup_clusters`` uses the closely-related min-contraction; this
-module is the literal alternating algorithm, exposed standalone so
-any pair-producing operator — near-dup candidates, entity-resolution
-matches, citation links — can cluster with it).
+Each level every node v contracts into ``m(v)``, the argmin of v's
+closed neighbourhood under the total order ``(xxhash64(id), id)``;
+edges remap to ``(m(u), m(v))`` with self-loops dropped and
+duplicates merged, and the next level runs on the contracted graph.
+Final labels compose the per-level maps back (k tiny joins).
 
-Shape per round (round-14 rewrite; the algorithm is unchanged, the
-physical plan is not): the edge list stays CANONICAL (u > v) across
-rounds, which makes both star operations expressible without
-re-deriving the symmetric view twice per star —
+Why the HASHED order, not plain id order: on a path whose ids
+increase along it, argmin by id maps every node to its predecessor,
+so each level shortens the path by ONE node and an n-node path needs
+n−1 levels. Under a hash order the local minima fall like a random
+permutation's, so a path loses a constant fraction of its nodes per
+level. Termination needs no round cap under ANY order:
+two adjacent nodes cannot both be their neighbourhood's argmin, so
+every level removes at least one node from every component that
+still has an edge.
 
-- large-star re-attaches exactly the REVERSED canonical rows to
-  m(u) = min of u's closed neighborhood (one groupBy + one join);
-- small-star's smaller-or-self neighborhood IS the canonical edge
-  list itself, with the self rows recovered from the min-map
-  directly (``least(min(v), u)`` already folds u in) instead of the
-  old ``sym.select(u).distinct()`` union branch — one whole
-  exchange per round gone;
-- only the small-star round deduplicates: min-aggregation is
-  duplicate-insensitive, so large-star's output can skip its
-  ``distinct`` (a second exchange gone) and let the small round's
-  final ``distinct`` clean up;
-- the min-map m is NODE-sized, so both join sides ride a size-gated
-  ``maybe_broadcast`` (gated on the initial node count, a one-time
-  scalar off the checkpointed node frame — node ids never leave the
-  original id set, so the initial count bounds every round). Below
-  the gate each round's joins are broadcast-hash and the UNIQUE
-  shuffle exchanges left are the two min-map groupBy aggregations
-  plus the final distinct (7 -> 3 per round; the min-map subplan
-  appears in several branches of the static plan but AQE's runtime
-  stage cache executes it once — verified at sf0.01: 12 stages
-  planned, 7 ran for one round body). Past the gate (billions of
-  nodes) the hint drops itself and the same plan runs as ordinary
-  shuffle joins — the standard alternating-star shape.
+The component's hashed argmin is its own local argmin at every
+level, so composition lands every node on it; one final
+``groupBy(rep).min(node)`` relabels each component to its MINIMUM
+id, the output contract every caller and oracle reads.
 
-Rounds are O(log d) in practice; every round ends in a
-``localCheckpoint`` so lineage stays flat, and convergence is ONE
-fixpoint probe job per round — a symmetric-difference ``take(1)``
-over the two checkpointed (hence cached, distinct, canonical) edge
-sets. The star forest is a fixpoint of both star operations, proved
-in the paper, so `edges unchanged` is exactly `converged`.
-
-No driver-side state beyond the one-row convergence flag and the
-node-count broadcast gate; node ids never leave the JVM.
+Scale shape: the node→supernode map is node-sized, so every remap
+join rides a size-gated ``maybe_broadcast`` gated on ONE scalar, the
+level-1 map's row count (contraction only removes nodes, so it
+bounds every level). Below the gate the remap joins are broadcast;
+past it (billions of nodes) the hint drops itself and the same plan
+runs as shuffle joins on node id. The data SHRINKS geometrically:
+level 1 is the only pass over the full edge set (one groupBy
+shuffle, two remap joins, a distinct); later levels touch a few
+hundred rows. Every level ends in a ``localCheckpoint`` so lineage
+stays flat, and termination is one ``isEmpty`` probe per level.
+Node ids never leave the JVM.
 """
 
 from __future__ import annotations
@@ -57,108 +46,86 @@ from global_superstore_data_warehouse_spark.operators.debugplan import dump_plan
 from global_superstore_data_warehouse_spark.operators.hints import maybe_broadcast
 
 
-def _star_round(edges: DataFrame, large: bool, n_nodes: int) -> DataFrame:
-    """One star round over a CANONICAL (u > v) edge list that may
-    carry duplicates. Output is canonical; only the small round
-    deduplicates (see module docstring).
-
-    large-star: every neighbor v > u re-attaches to m(u) = min of
-    u's closed neighborhood; small-star: every neighbor v <= u (and
-    u itself) re-attaches to the min of u's smaller-or-self
-    neighborhood. ``n_nodes`` (the initial node count — an upper
-    bound on any round's node set) gates the broadcast of the
-    node-sized min-map.
-    """
-    rev = edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    if large:
-        # closed-neighborhood min needs BOTH directions; duplicates
-        # in `edges` are harmless under min
-        sym = edges.union(rev)
-        m = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        # canonical form: the v > u attach rows are exactly `rev`;
-        # m(u) <= u < v, so the output is canonical and never a
-        # self-loop — no filter, no distinct needed here
-        return rev.join(maybe_broadcast(m, n_rows=n_nodes), "u").select(
-            F.col("v").alias("u"), F.col("m").alias("v")
-        )
-    # small-star: the smaller-neighbor rows ARE the canonical edge
-    # list; least(min(v), u) folds the self row into the min, and the
-    # self ATTACH rows come straight off the min-map (u -> m(u)) —
-    # no sym rebuild, no distinct-u union branch
-    m = edges.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-    out = (
-        edges.join(maybe_broadcast(m, n_rows=n_nodes), "u")
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .union(m.select("u", F.col("m").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    return out
+def _key(col: str):
+    """The hashed total order: (xxhash64(id), id) — the id breaks
+    hash ties, so the order is total."""
+    return F.struct(F.xxhash64(col).alias("h"), F.col(col).alias("id"))
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 50,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Label every node in ``edges`` with its component's MINIMUM
     node id. Returns ``(node, component)`` — one row per distinct
     node that appears in the edge list (attach singletons yourself;
     they never need to ride the iteration).
 
-    Numeric or otherwise totally-ordered node ids required (the
-    component representative is the order minimum).
+    Totally-ordered node ids required (the component label is the
+    order minimum). Edges may be directed either way, duplicated or
+    self-loops.
     """
-    e = (
-        edges.select(
-            F.greatest(src, dst).alias("u"), F.least(src, dst).alias("v")
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    # symmetric edge set: src alone then covers every edge-incident
+    # node; duplicates and self-loops are harmless (min is
+    # duplicate-insensitive, the remap drops self-loops and the
+    # level's distinct merges duplicates)
+    cur = e.union(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).localCheckpoint()
+
+    levels = []
+    n_active = None
+    while True:
+        m = (
+            cur.groupBy("src")
+            .agg(F.min(_key("dst")).alias("nmin"))
+            .select(
+                F.col("src").alias("v"),
+                F.least(_key("src"), F.col("nmin"))["id"].alias("m"),
+            )
+            .localCheckpoint()
         )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .union(e.select("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    # one scalar off the cached node frame: every round's node set is
-    # a subset of the original ids, so this count is a sound upper
-    # bound for the per-round broadcast gates (conservative past the
-    # gate: at billions of nodes the hints drop and the same plan
-    # runs the shuffle-join star rounds)
-    n_nodes = nodes.count()
-    first = e  # shared with `nodes`' lineage — never unpersisted here
-    for rnd in range(max_rounds):
-        after_large = _star_round(e, large=True, n_nodes=n_nodes)
-        round_body = _star_round(after_large, large=False, n_nodes=n_nodes)
-        if rnd == 0:
+        if n_active is None:
+            # ONE scalar gates every level's broadcast hints: the
+            # symmetric level-1 edge set's sources are every
+            # edge-incident node, and contraction only removes nodes
+            n_active = m.count()
+        levels.append(m)
+        ms = maybe_broadcast(
+            m.select(F.col("v").alias("src"), F.col("m").alias("ms")), n_rows=n_active
+        )
+        md = maybe_broadcast(
+            m.select(F.col("v").alias("dst"), F.col("m").alias("md")), n_rows=n_active
+        )
+        prev = cur
+        level_body = (
+            cur.join(ms, "src")
+            .join(md, "dst")
+            .filter(F.col("ms") != F.col("md"))
+            .select(F.col("ms").alias("src"), F.col("md").alias("dst"))
+            .distinct()
+        )
+        if len(levels) == 1:
             # evidence hook (no-op unless SPARK_GRAFT_PLAN_DIR set):
-            # the final explain is post-checkpoint, so the per-round
-            # join strategy is captured here
-            dump_plan(round_body, "star_cc_round_body")
-        after_small = round_body.localCheckpoint()
-        # single probe job: both sets are distinct + checkpointed, so
-        # the symmetric difference reads cached rows and take(1)
-        # early-exits on the first witness of change
-        changed = not (
-            after_small.exceptAll(e)
-            .unionAll(e.exceptAll(after_small))
-            .isEmpty()
-        )
-        # the probe was the old round's last reader — release its
-        # blocks (same session-lifetime leak the round-8 advisor
-        # flagged in the percentile/k-center/k-core loops)
-        if e is not first:
-            e.unpersist()
-        e = after_small
-        if not changed:
+            # the per-level remap join strategy is invisible in the
+            # final post-checkpoint explain — capture level 1 here
+            dump_plan(level_body, "connected_components_level_body")
+        cur = level_body.localCheckpoint()
+        # the superseded level's edges are never read again (levels
+        # keep their OWN checkpoints for the fold below)
+        prev.unpersist()
+        if cur.isEmpty():
             break
-    # star forest: u -> root(v); roots label themselves
-    labels = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    roots = nodes.join(
-        labels.select("node"), "node", "left_anti"
-    ).withColumn("component", F.col("node"))
-    return labels.unionByName(roots)
+
+    total = levels[0].select(F.col("v").alias("node"), F.col("m").alias("rep"))
+    for lv in levels[1:]:
+        # level maps past the first are tiny (the graph contracted),
+        # but the hint stays size-gated like the remap joins above
+        total = total.join(
+            maybe_broadcast(lv, n_rows=n_active), total.rep == lv.v, "left"
+        ).select("node", F.coalesce("m", "rep").alias("rep"))
+    # relabel each component from its hashed argmin to its min id
+    rep_min = total.groupBy("rep").agg(F.min("node").alias("component"))
+    return total.join(maybe_broadcast(rep_min, n_rows=n_active), "rep").select(
+        "node", "component"
+    )

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from global_superstore_data_warehouse_spark.catalog import load
+from global_superstore_data_warehouse_spark.operators.graph import connected_components
 from global_superstore_data_warehouse_spark.operators.hints import spread_scan
 from global_superstore_data_warehouse_spark.operators.keys import add_surrogate_key
 
@@ -392,24 +393,19 @@ def entity_resolution_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
        hypothetical); the attribute conjunction is what makes the
        clusters meaningful.
     3. ENTITIES: connected components over the match pairs
-       (``operators/graph.connected_components`` — the alternating
-       large/small-star operator gets a registered consumer beyond
-       the dedup endgame); unmatched customers attach as their own
-       singleton entity.
+       (``operators/graph.connected_components`` — the same
+       min-contraction operator as the dedup endgame); unmatched
+       customers attach as their own singleton entity.
     4. SURVIVORSHIP: one groupBy(entity) — member count, the
        canonical member's name (min custkey, the same canonical-id
        convention as dedup_clusters), pooled balance.
 
     Scale shape: variant explode is zero-shuffle; the variant
-    equi-join carries (id, name, nation, segment) only; CC rounds
+    equi-join carries (id, name, nation, segment) only; CC levels
     run on the match-pair edge set (tiny relative to the corpus —
     matches, not candidates); the final aggregate is one shuffle on
     entity id. No stage is all-pairs.
     """
-    from global_superstore_data_warehouse_spark.operators.graph import (
-        connected_components,
-    )
-
     cust = load(spark, sf_dir, "customer")
     # spread the single-split scan before the zero-shuffle variant
     # explode: generation + the Levenshtein verify otherwise run in

@@ -21,21 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from global_superstore_data_warehouse_spark.catalog import load
+from global_superstore_data_warehouse_spark.catalog import TABLES, load
 from global_superstore_data_warehouse_spark.operators.hints import stats_gated
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 
 def order_details_wide(spark: SparkSession, sf_dir: str) -> DataFrame:

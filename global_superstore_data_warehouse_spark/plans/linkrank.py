@@ -28,7 +28,7 @@ connected components and plans/embeddings.kmeans_assign):
   identical K rounds as unrolled CTEs. Every node has out-degree
   >= 1 by construction (edges are bidirectional), so there is no
   dangling-mass term.
-- RUNTIME CONVERGENCE PROBES (round 9, on by default): the fixed
+- RUNTIME CONVERGENCE PROBES (round 9, always on): the fixed
   round counts are corpus-pinned at test SF, so each iterative
   operator now self-checks at runtime, wherever the plan runs —
   not only under pytest. k-core and BFS assert the true fixed
@@ -42,8 +42,7 @@ connected components and plans/embeddings.kmeans_assign):
   It holds on ANY corpus and catches mass leaks / damping bugs.
   Probe cost: k-core/BFS one extra scalar peel/hop; PageRank one
   node-frame checkpoint + a node-keyed diff job (~free next to the
-  edge joins). Set CONVERGENCE_PROBE = False to skip (e.g.
-  micro-benchmarks of the bare iteration).
+  edge joins). The probes always run.
 """
 
 from __future__ import annotations
@@ -60,10 +59,6 @@ from global_superstore_data_warehouse_spark.operators.hints import (
 
 DAMPING = 0.85
 N_ITER = 5
-
-# Runtime self-check of the fixed-round iterative operators (see
-# module docstring). Scalar-only driver cost, one extra round max.
-CONVERGENCE_PROBE = True
 
 
 def _copurchase_edges(li: DataFrame) -> DataFrame:
@@ -172,9 +167,8 @@ def part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r_{K-1} materializes work round K needs anyway), NOT by running
     # an extra round: the probe's marginal cost is one node-keyed
     # diff job over two node-sized cached frames.
-    prev = None
     for i in range(N_ITER):
-        if CONVERGENCE_PROBE and i == N_ITER - 1:
+        if i == N_ITER - 1:
             ranks = ranks.localCheckpoint(eager=True)
             prev = ranks
         ranks = _round(ranks)
@@ -184,9 +178,8 @@ def part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             # projection, so the per-round join strategy the
             # broadcast gate changes is captured here instead
             dump_plan(ranks, "part_pagerank_round_body")
-    if CONVERGENCE_PROBE and prev is not None:
-        ranks = ranks.localCheckpoint(eager=True)  # probe + result reuse it
-        _assert_contraction(prev, ranks, DAMPING ** (N_ITER - 1) * 2.0)
+    ranks = ranks.localCheckpoint(eager=True)  # probe + result reuse it
+    _assert_contraction(prev, ranks, DAMPING ** (N_ITER - 1) * 2.0)
     return ranks.select(
         F.col("node").alias("l_partkey"),
         F.round(F.col("rank") * 1e6, 6).alias("rank_ppm"),
@@ -496,24 +489,23 @@ def copurchase_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
         # that here (one frontier-sized join + isEmpty), wherever the
         # plan runs: a non-empty next frontier means reachable nodes
         # would be mis-reported as dist = -1.
-        if CONVERGENCE_PROBE:
-            nxt = (
-                maybe_broadcast(frontier, n_rows=frontier_n)
-                .join(edges, frontier.node == edges.src)
-                .select(F.col("dst").alias("node"))
-                .distinct()
-                .join(
-                    maybe_broadcast(visited.select("node"), n_rows=visited_n),
-                    "node",
-                    "left_anti",
-                )
+        nxt = (
+            maybe_broadcast(frontier, n_rows=frontier_n)
+            .join(edges, frontier.node == edges.src)
+            .select(F.col("dst").alias("node"))
+            .distinct()
+            .join(
+                maybe_broadcast(visited.select("node"), n_rows=visited_n),
+                "node",
+                "left_anti",
             )
-            if not nxt.isEmpty():
-                raise RuntimeError(
-                    f"bfs probe: frontier not drained after {BFS_HOPS} "
-                    f"hops; raise BFS_HOPS and the oracle's unrolled "
-                    f"CTE depth together"
-                )
+        )
+        if not nxt.isEmpty():
+            raise RuntimeError(
+                f"bfs probe: frontier not drained after {BFS_HOPS} "
+                f"hops; raise BFS_HOPS and the oracle's unrolled "
+                f"CTE depth together"
+            )
     return (
         nodes.join(visited, "node", "left")
         .select(
@@ -775,7 +767,7 @@ def kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
         if n_active == prev_n:
             at_fixed_point = True
             break
-    if CONVERGENCE_PROBE and not at_fixed_point:
+    if not at_fixed_point:
         # Fixed-point probe: peeling only REMOVES nodes, so one more
         # round with an unchanged COUNT proves the bounded result IS
         # the true k-core — two scalar counts, wherever the plan

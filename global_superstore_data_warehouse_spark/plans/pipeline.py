@@ -60,7 +60,7 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, in
         t0 = time.perf_counter()
         n = stage_append(load(spark, sf_dir, t), os.path.join(out_dir, "staging", t), load_id)
         counts[f"staging.{t}"] = n
-        log_step(spark, log_path, f"stage_{t}", n, "staged", load_id, _ms_since(t0))
+        log_step(log_path, f"stage_{t}", n, "staged", load_id, _ms_since(t0))
 
     # --- E2: 3NF build (dims in dependency order, then fact) ---
     def write_table(df: DataFrame, name: str, partition_by: str | None = None) -> int:
@@ -73,7 +73,7 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, in
             .parquet(path),
         )
         counts[name] = n
-        log_step(spark, log_path, name, n, "loaded", load_id, _ms_since(t0))
+        log_step(log_path, name, n, "loaded", load_id, _ms_since(t0))
         return n
 
     write_table(warehouse.dim_market(spark, sf_dir), "3nf/dim_market")
@@ -132,7 +132,7 @@ def run_incremental_pipeline(
         )
         counts[f"{label}.orders"] = n
         log_step(
-            spark, log_path, f"stage_inc_orders_{label}", n, "staged", load_id,
+            log_path, f"stage_inc_orders_{label}", n, "staged", load_id,
             _ms_since(t0),
         )
 
@@ -149,7 +149,7 @@ def run_incremental_pipeline(
             .parquet(fact_path),
         )
         log_step(
-            spark, log_path, f"fact_inc_{label}", counts[f"{label}.fact_rows"],
+            log_path, f"fact_inc_{label}", counts[f"{label}.fact_rows"],
             "loaded", load_id, _ms_since(t0),
         )
 

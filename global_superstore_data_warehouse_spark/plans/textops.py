@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from global_superstore_data_warehouse_spark.catalog import load
 from global_superstore_data_warehouse_spark.functions import text as T
 from global_superstore_data_warehouse_spark.operators.dedup import dedup_exact
+from global_superstore_data_warehouse_spark.operators.graph import connected_components
 from global_superstore_data_warehouse_spark.operators.hints import (
     cpu_repartition,
     maybe_broadcast,
@@ -703,115 +704,29 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical document per cluster (min doc_id). Every document gets
     a cluster_id; docs with no near-dup are their own canonical.
 
-    Spark formulation: iterative MIN-CONTRACTION (the large-star /
-    small-star contraction family) — each level every node contracts
-    into ``m(v) = min(v, neighbors(v))``, edges remap to
-    ``(m(u), m(v))`` with self-loops dropped and duplicates merged,
-    and the next level runs on the contracted graph. Dense near-dup
-    clusters collapse into their min in one level; chains halve per
-    level, so levels ≈ O(log diameter) — measured at sf0.1: the old
-    diameter-bound label propagation ran 12 rounds / 4.6 s, this
-    runs 5 levels / 1.8 s on identical output. Crucially the data
-    SHRINKS geometrically: level 1 is the only pass over the full
-    edge set (one groupBy shuffle + two remap joins + a distinct);
-    later levels touch a few hundred rows. Final labels compose the
-    per-level maps back (k tiny joins); the component min survives
-    every level (it is its own local min), so the composition lands
-    every node on its component min. Only edge-incident nodes
-    iterate; singleton docs (no candidate pair survived the Jaccard
-    gate — the vast majority of a real corpus) bypass the loop and
-    rejoin at the end as their own canonical.
-
-    Scale note: the per-level node→supernode map is document-count-
-    sized, so it rides a SIZE-GATED broadcast (``maybe_broadcast``,
-    counted off the already-checkpointed level map — a cached narrow
-    scan, not a recompute): below the row gate the remap joins are
-    broadcast, and at 100 TB (billions of nodes) the hint drops
-    itself and the SAME code runs the remaps as shuffle joins on
-    node id — the standard large-star/small-star shape, still
-    O(log d) levels over a geometrically shrinking edge set.
+    Components come from ``operators/graph.connected_components``
+    (min-contraction over a hashed node order: O(log n) levels even
+    on adversarial chains, and the edge set shrinks geometrically, so
+    level 1 is the only pass over the full pair set). Only
+    edge-incident nodes iterate; singleton docs (no candidate pair
+    survived the Jaccard gate — the vast majority of a real corpus)
+    bypass the loop and rejoin at the end as their own canonical.
     """
     docs = load(spark, sf_dir, "documents")
     pairs = _verified_cluster_pairs(docs, sf_dir)
-    edges = (
-        pairs.union(pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .localCheckpoint()
-    )
-    pairs.unpersist()  # folded into the edges checkpoint above
-    # symmetric edges → src alone covers every edge-incident node
-    active = edges.select(F.col("src").alias("doc_id")).distinct().localCheckpoint()
-
-    # ONE scalar gates every level's broadcast hints: contraction only
-    # ever removes nodes, so the round-0 edge-incident node count (off
-    # the cached `active` frame) is a sound upper bound for every
-    # level's map size — the old per-level m.count() gate jobs
-    # (round-14: 1 job instead of L) bought nothing below the gate and
-    # the bound degrades identically above it
-    n_active = active.count()
-
-    levels = []
-    cur = edges
-    while True:
-        m = (
-            cur.groupBy("src")
-            .agg(F.min("dst").alias("nmin"))
-            .select(F.col("src").alias("v"), F.least("src", "nmin").alias("m"))
-            .localCheckpoint()
-        )
-        levels.append(m)
-        ms = maybe_broadcast(
-            m.select(F.col("v").alias("src"), F.col("m").alias("ms")), n_rows=n_active
-        )
-        md = maybe_broadcast(
-            m.select(F.col("v").alias("dst"), F.col("m").alias("md")), n_rows=n_active
-        )
-        prev = cur
-        level_body = (
-            cur.join(ms, "src")
-            .join(md, "dst")
-            .filter(F.col("ms") != F.col("md"))
-            .select(F.col("ms").alias("src"), F.col("md").alias("dst"))
-            .distinct()
-        )
-        if len(levels) == 1:
-            # evidence hook (no-op unless SPARK_GRAFT_PLAN_DIR set):
-            # the per-level remap join strategy is invisible in the
-            # final post-checkpoint explain — capture level 1 here
-            from global_superstore_data_warehouse_spark.operators.debugplan import (
-                dump_plan,
-            )
-
-            dump_plan(level_body, "dedup_clusters_level_body")
-        cur = level_body.localCheckpoint()
-        # the superseded contraction level's blocks are never read
-        # again (levels keep their OWN checkpoints for the remap
-        # fold) — release them; the round-8 advisor's session-lifetime
-        # leak pattern
-        prev.unpersist()
-        if cur.isEmpty():
-            break
-
-    total = levels[0].select(F.col("v").alias("doc_id"), F.col("m").alias("label"))
-    for lv in levels[1:]:
-        # level maps past the first are tiny (the graph contracted),
-        # but the hint stays size-gated like the remap joins above
-        total = total.join(maybe_broadcast(lv, n_rows=n_active), total.label == lv.v, "left").select(
-            "doc_id", F.coalesce("m", "label").alias("label")
-        )
-    # singletons fused into ONE left join (round-14): `total` covers
-    # exactly the edge-incident nodes (levels[0].v = distinct edge
-    # sources = `active`), so docs LEFT JOIN total + coalesce is
-    # row-identical to the old anti-join + union — one join instead
-    # of an anti-join plus a two-branch union
+    labeled = connected_components(pairs)
+    pairs.unpersist()  # folded into the operator's edge checkpoint
+    # singletons fused into ONE left join (round-14): `labeled` holds
+    # exactly the edge-incident docs, so docs LEFT JOIN labeled +
+    # coalesce is row-identical to an anti-join + union
+    label = F.coalesce("component", F.col("doc_id"))
     return (
         docs.select("doc_id")
-        .join(total, "doc_id", "left")
+        .join(labeled.withColumnRenamed("node", "doc_id"), "doc_id", "left")
         .select(
             "doc_id",
-            F.coalesce("label", F.col("doc_id")).alias("cluster_id"),
-            (F.coalesce("label", F.col("doc_id")) == F.col("doc_id")).alias(
-                "is_canonical"
-            ),
+            label.alias("cluster_id"),
+            (label == F.col("doc_id")).alias("is_canonical"),
         )
     )
 
@@ -854,44 +769,6 @@ DEDUP_CLUSTERS_ORACLE = f"""
     FROM reach
     GROUP BY n
 """
-
-
-def dedup_clusters_smallstar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dedup_clusters`` with its component step swapped for the
-    literal alternating large-star/small-star algorithm
-    (``operators/graph.connected_components``) — same pair
-    generation, same output contract, same oracle. Registered as the
-    proof that the generic graph operator drops into the dedup
-    endgame unchanged (equivalence-tested against the min-contraction
-    plan; union-find property tests cover the operator itself)."""
-    from global_superstore_data_warehouse_spark.operators.graph import (
-        connected_components,
-    )
-
-    docs = load(spark, sf_dir, "documents")
-    pairs = _verified_cluster_pairs(docs, sf_dir)
-    comp = connected_components(pairs)
-    labeled = comp.select(
-        F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
-    )
-    # singletons fused into ONE left join (round-14, same rewrite as
-    # dedup_clusters): `labeled` holds exactly the edge-incident docs,
-    # so docs LEFT JOIN labeled + coalesce is row-identical to the old
-    # anti-join + union
-    return (
-        docs.select("doc_id")
-        .join(labeled, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"),
-            (F.coalesce("cluster_id", F.col("doc_id")) == F.col("doc_id")).alias(
-                "is_canonical"
-            ),
-        )
-    )
-
-
-DEDUP_CLUSTERS_SMALLSTAR_ORACLE = DEDUP_CLUSTERS_ORACLE
 
 
 # --- cross-modal near-dup (text + embedding agreement) ---------------
@@ -2788,8 +2665,9 @@ def dedup_bcubed_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation order exposure.
 
     Plan shape: both pair generators are the banded equi-joins
-    already proven at recall 1.0; components come from the generic
-    alternating-star operator (per-round single shuffles); ONE
+    already proven at recall 1.0; components come from the one
+    connected-components operator (``operators/graph.py``,
+    min-contraction over a hashed node order) on both sides; ONE
     doc-scale groupBy collapses both assignments into the (C,G)
     contingency cells (checkpointed — the plan fans out over it
     three ways and must not re-run the dedup passes), and every
@@ -2797,10 +2675,6 @@ def dedup_bcubed_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two dedup passes it compares, which an engineering team runs
     anyway when evaluating a cheaper dedup family.
     """
-    from global_superstore_data_warehouse_spark.operators.graph import (
-        connected_components,
-    )
-
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
     def clusters(pairs: DataFrame, a: str, b: str, out: str) -> DataFrame:
@@ -2817,7 +2691,7 @@ def dedup_bcubed_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The two dedup passes are INDEPENDENT until the contingency join
     # below, and each is a serial chain of small eager jobs
-    # (signature checkpoints, CC rounds, probes) that leaves most
+    # (signature checkpoints, CC levels, probes) that leaves most
     # executors idle — build them in two driver threads so their
     # latencies overlap (guide §2.6; see operators/par.py — same jobs,
     # same results, wall ≈ max(side) instead of sum).

@@ -41,7 +41,6 @@ _ARROW_SCHEMA = pa.schema(
 
 
 def log_step(
-    spark: SparkSession,
     log_path: str,
     procedure_name: str,
     rows_affected: int,
@@ -51,7 +50,6 @@ def log_step(
 ) -> None:
     """Append one step's row; ``duration_ms`` is the step's wall time
     as its caller measured it on the driver."""
-    del spark  # kept for callers: the row is written on the driver
     row = pa.Table.from_pylist(
         [
             {

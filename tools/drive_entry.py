@@ -1,6 +1,15 @@
-"""Driver-simulation: exercise __spark_entry__ exactly as the harness does."""
-import sys, hashlib, json
-sys.path.insert(0, "/root/repo")
+"""Contract check through __spark_entry__: a smoke call of entry(),
+then registered queries compared against their DuckDB oracles at
+sf0.01 (row count, column names, order-insensitive value hash).
+
+Usage: python tools/drive_entry.py [name ...]
+
+With no names every registered query runs, in registry order; names
+restrict the run to those queries. Prints one line per query and a
+final ``FAILS: N``; exits 1 if any query mismatches.
+"""
+import sys, hashlib, json, os, time
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import __spark_entry__ as e
 from pyspark.sql import SparkSession
@@ -9,6 +18,7 @@ spark = (SparkSession.builder.master("local[8]")
          .config("spark.sql.shuffle.partitions","8")
          .config("spark.sql.session.timeZone","UTC")
          .config("spark.ui.enabled","false").getOrCreate())
+spark.sparkContext.setLogLevel("ERROR")
 
 # 1. smoke: entry()
 df = e.entry(spark)
@@ -26,14 +36,13 @@ def value_hash(pdf):
     recs = sorted(json.dumps([None if v != v else v for v in row], default=str) for row in pdf.itertuples(index=False))
     return hashlib.sha256("\n".join(recs).encode()).hexdigest()
 
-import time
-
 qs, oracles = e.queries(), e.oracle_sql()
+names = sys.argv[1:] or list(qs)
 fails = 0
 slow = {}
-for name, fn in qs.items():
+for name in names:
     t0 = time.perf_counter()
-    spdf = fn(spark, SF).toPandas()
+    spdf = qs[name](spark, SF).toPandas()
     el = time.perf_counter() - t0
     slow[name] = el
     o = oracles.get(name)
@@ -48,5 +57,9 @@ for name, fn in qs.items():
     print(f"{name}: {status} rows={len(spdf)}/{len(opdf)} cols_match={ok_cols} hash_match={ok_hash} [{el:.2f}s]")
 top = sorted(slow.items(), key=lambda kv: -kv[1])[:10]
 print("slowest:", ", ".join(f"{n}={s:.1f}s" for n, s in top))
-print("window_spark_s:", round(sum(s for n, s in list(slow.items())[:50]), 1))
+if not sys.argv[1:]:
+    # the rotation window: the first 50 registry entries
+    print("window_spark_s:", round(sum(s for n, s in list(slow.items())[:50]), 1))
 print("FAILS:", fails)
+spark.stop()
+sys.exit(1 if fails else 0)

@@ -27,34 +27,26 @@ from pyspark.sql import functions as F
 BROADCAST_MAX_ROWS = 5_000_000
 
 
-def maybe_broadcast(
-    df: DataFrame,
-    max_rows: int | None = None,
-    n_rows: int | None = None,
-) -> DataFrame:
+def maybe_broadcast(df: DataFrame, n_rows: int | None = None) -> DataFrame:
     """Broadcast hint only when the frame is measured small.
 
-    ``max_rows`` defaults to the module's ``BROADCAST_MAX_ROWS``,
-    resolved at CALL time so tests (and deployments) can lower the
-    gate globally and prove the shuffle-mode plan end-to-end.
-    ``n_rows`` skips the count when the caller already knows the
-    cardinality (e.g. it counted the checkpointed parent frame).
+    The gate is the module's ``BROADCAST_MAX_ROWS``, read at CALL
+    time so tests can lower it globally and prove the shuffle-mode
+    plan end-to-end. ``n_rows`` skips the count when the caller
+    already knows the cardinality (e.g. it counted the checkpointed
+    parent frame).
     """
-    if max_rows is None:
-        max_rows = BROADCAST_MAX_ROWS
     n = df.count() if n_rows is None else n_rows
-    return F.broadcast(df) if n <= max_rows else df
+    return F.broadcast(df) if n <= BROADCAST_MAX_ROWS else df
 
 
 def _session_parallelism(df: DataFrame) -> int:
     """The session's shuffle-partition setting (the deployment's
     scale knob — ``tune_shuffle_for_input`` raises it on real data),
-    floored at the executor core count."""
+    floored at the executor core count. Spark rejects a non-integer
+    value when it is set, so the parse cannot fail on a live session."""
     spark = df.sparkSession
-    try:
-        conf_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        conf_n = 0
+    conf_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return max(spark.sparkContext.defaultParallelism, conf_n)
 
 

@@ -4,9 +4,10 @@ per-column table profiler.
 
 Both are "run before you scale" tools: the skew report is what you
 consult before choosing broadcast/salt/AQE strategy for a 100 TB
-join (operators/skew.py is the remedy; this is the diagnosis), and
-the PSI report is the standing data-quality monitor that catches a
-silently drifting upstream feed before it poisons a training run.
+join (AQE's skew split is the default remedy; this is the
+diagnosis), and the PSI report is the standing data-quality monitor
+that catches a silently drifting upstream feed before it poisons a
+training run.
 
 Scale shapes: both are two-stage aggregations — a keyed partial
 aggregate that map-side-combines to one row per key/group, then a
@@ -30,7 +31,8 @@ def join_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Decision thresholds (the point of the report): skew_ratio near 1
     → plain hash join partitions evenly; a heavy top_key_share →
-    salt that key (operators/skew.salted_join) or let AQE split it;
+    let AQE's skew split handle it, or salt that key as setsim's
+    token-block join does (``setsim._salted_block_join``);
     n_keys small enough → the other side is broadcastable.
 
     Plan: groupBy(key).count() partial-aggregates to one row per key,

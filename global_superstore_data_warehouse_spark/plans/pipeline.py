@@ -100,8 +100,13 @@ def run_incremental_pipeline(
        the same load_id raises (S3/C4);
     2. appends ONLY the affected yearly fact partitions via dynamic
        partition overwrite — untouched years' directories are never
-       rewritten (the 100 TB property: incremental cost scales with
-       the increment, not the table).
+       rewritten.
+
+    Only the WRITES scale with the increment. Each load filters the
+    full ``fact_orders`` plan by year, so it re-reads and re-joins all
+    of orders and lineitem: measured at sf0.01, the two loads read
+    278,102 input records against 75,000 source rows and shuffled
+    2.83 MB, twice the full build's 1.43 MB (ROADMAP open item 2).
 
     Returns rowcounts per load and the final fact count.
     """

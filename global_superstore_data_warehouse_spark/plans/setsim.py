@@ -52,6 +52,7 @@ from global_superstore_data_warehouse_spark.operators.hints import (
     cpu_repartition,
     spread_scan,
 )
+from global_superstore_data_warehouse_spark.operators.par import build_concurrently
 
 TAU = 0.95
 
@@ -86,6 +87,85 @@ def _salt_factor(max_df: int | None, n_classes: int) -> int:
     return SALTS if max_df * SALTS >= n_classes else 1
 
 
+def _token_classes(
+    docs: DataFrame, *class_aggs: F.Column
+) -> tuple[DataFrame, DataFrame, DataFrame, int, int]:
+    """The spine both exact joins share: tokenize, collapse identical
+    token sets to classes, count each token's class frequency, and
+    decide the salt. Returns ``(member, classes, dfreq, vocab,
+    salts)``:
+
+    - ``member`` (doc_id, cls) and ``classes`` (cls, *class_aggs, ts,
+      n) are independent eager checkpoints, materialized in two
+      driver threads (guide §2.6, operators/par.py);
+    - ``dfreq`` (token, df) is checkpointed off ``classes``, so the
+      token groupBy runs once whatever the number of consumers;
+    - ``vocab`` and the salt gate's hottest-block bound (max df) come
+      from one vocabulary-sized aggregate, and ``salts`` is
+      ``_salt_factor``'s decision over it and the class count.
+    """
+    toks = (
+        docs.select(
+            "doc_id",
+            F.array_sort(
+                F.array_distinct(F.filter(tokens("text"), lambda t: t != ""))
+            ).alias("ts"),
+        )
+        .withColumn("n", F.size("ts"))
+        .filter(F.col("n") > 0)  # empty sets have no defined Jaccard
+        .withColumn("cls", F.md5(F.concat_ws("\x1f", "ts")))
+    )
+    member, classes = build_concurrently(
+        lambda: toks.select("doc_id", "cls").localCheckpoint(eager=True),
+        lambda: toks.groupBy("cls")
+        .agg(
+            *class_aggs,
+            F.min_by("ts", "doc_id").alias("ts"),  # identical across members
+            F.min("n").alias("n"),
+        )
+        .localCheckpoint(eager=True),
+    )
+    dfreq = (
+        classes.select(F.explode("ts").alias("token"))
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .localCheckpoint(eager=True)
+    )
+    n_classes = classes.count()
+    vocab, max_df = dfreq.agg(F.count(F.lit(1)), F.max("df")).first()
+    return member, classes, dfreq, vocab, _salt_factor(max_df, n_classes)
+
+
+def _salted_block_join(
+    a: DataFrame, b: DataFrame, salts: int, cond: F.Column
+) -> DataFrame:
+    """Token-block equi-join with the hot block split ``salts`` ways
+    (see SALTS): side ``a`` is replicated once per salt, side ``b`` is
+    keyed by pmod(xxhash64(cls), salts), so every (a, b) pair meets
+    in exactly one replica. Both sides are cpu_repartition-pinned on
+    (token, salt): the candidate blocks are byte-tiny but CPU-heavy,
+    so AQE's byte model would otherwise coalesce the salted join back
+    into one task (observed: the salt alone moved the 10.4 s hot task
+    but AQE re-serialized it). ``cond`` is the caller's extra join
+    condition over the ``a``/``b`` aliases."""
+    a = cpu_repartition(
+        a.withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(salts - 1)))),
+        "token",
+        "salt",
+    )
+    b = cpu_repartition(
+        b.withColumn("salt", F.pmod(F.xxhash64("cls"), F.lit(salts)).cast("int")),
+        "token",
+        "salt",
+    )
+    return a.alias("a").join(
+        b.alias("b"),
+        (F.col("a.token") == F.col("b.token"))
+        & (F.col("a.salt") == F.col("b.salt"))
+        & cond,
+    )
+
+
 def jaccard_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread the single-split scan: the sort+distinct tokenize and
     # per-doc md5 fingerprint feeding BOTH checkpoints otherwise run
@@ -100,52 +180,10 @@ def jaccard_pairs_for_docs(docs: DataFrame) -> DataFrame:
     callers that only need ground truth over a (deterministic)
     document sample filter BEFORE this plan, so every stage runs at
     sample cardinality (see textops.minhash_recall_eval)."""
-    toks = (
-        docs.select(
-            "doc_id",
-            F.array_sort(
-                F.array_distinct(F.filter(tokens("text"), lambda t: t != ""))
-            ).alias("ts"),
-        )
-        .withColumn("n", F.size("ts"))
-        .filter(F.col("n") > 0)  # empty sets have no defined Jaccard
-        .withColumn("cls", F.md5(F.concat_ws("\x1f", "ts")))
+    member, classes, dfreq, _, salts = _token_classes(
+        docs, F.min("doc_id").alias("rep")
     )
-    # membership and class-exemplar checkpoints are independent (both
-    # derive from the tokenize projection, neither from the other) —
-    # materialize them in two driver threads (guide §2.6,
-    # operators/par.py): same two jobs, overlapped wall clock
-    from global_superstore_data_warehouse_spark.operators.par import (
-        build_concurrently,
-    )
-
-    member, classes = build_concurrently(
-        lambda: toks.select("doc_id", "cls").localCheckpoint(eager=True),
-        lambda: toks.groupBy("cls")
-        .agg(
-            F.min("doc_id").alias("rep"),
-            F.min_by("ts", "doc_id").alias("ts"),  # identical across members
-            F.min("n").alias("n"),
-        )
-        .localCheckpoint(eager=True),
-    )
-
     ex = classes.select("cls", "rep", "n", F.explode("ts").alias("token"))
-    # vocabulary-sized; checkpointed because it now has two consumers
-    # (the rarity-order broadcast AND the salt-gate aggregate below) —
-    # without it each would re-run the explode+groupBy lineage
-    dfreq = (
-        ex.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .localCheckpoint(eager=True)
-    )
-
-    # skew gate for the candidate join's salt (see _salt_factor):
-    # n_classes off the cached checkpoint, max df via one tiny
-    # aggregate over the cached vocabulary rows
-    n_classes = classes.count()
-    max_df = dfreq.agg(F.max("df")).first()[0]
-    salts = _salt_factor(max_df, n_classes)
 
     # class-level rarity order (df asc, token asc — total,
     # deterministic); the df table is vocabulary-sized -> broadcast
@@ -172,35 +210,12 @@ def jaccard_pairs_for_docs(docs: DataFrame) -> DataFrame:
     alpha = F.ceil(
         F.lit(TAU / (1.0 + TAU)) * (F.col("a.n") + F.col("b.n")) - F.lit(1e-9)
     )
-    # salt the prefix-token block key (see SALTS): side a replicated
-    # per salt, side b keyed by pmod(xxhash64(cls), SALTS) — equality
-    # on (token, salt) splits a hot token's candidate block SALTS ways
-    # the salted join's own exchanges are cpu_repartition-pinned on
-    # (token, salt): the candidate blocks are byte-tiny but CPU-heavy,
-    # so AQE's byte model would otherwise coalesce the salted join
-    # back into one task (observed: the salt alone moved the 10.4 s
-    # hot task but AQE re-serialized it)
-    pre_a = cpu_repartition(
-        prefix.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(salts - 1)))
-        ),
-        "token",
-        "salt",
-    )
-    pre_b = cpu_repartition(
-        prefix.withColumn(
-            "salt", F.pmod(F.xxhash64("cls"), F.lit(salts)).cast("int")
-        ),
-        "token",
-        "salt",
-    )
     cands = (
-        pre_a.alias("a")
-        .join(
-            pre_b.alias("b"),
-            (F.col("a.token") == F.col("b.token"))
-            & (F.col("a.salt") == F.col("b.salt"))
-            & (F.col("a.rep") < F.col("b.rep"))
+        _salted_block_join(
+            prefix,
+            prefix,
+            salts,
+            (F.col("a.rep") < F.col("b.rep"))
             & (F.col("b.n") >= F.ceil(F.lit(TAU) * F.col("a.n")))
             & (F.col("b.n") <= F.floor(F.col("a.n") / F.lit(TAU)))
             & (
@@ -321,9 +336,10 @@ def superset_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicates (same token set), and the count of documents whose set
     is a proper superset.
 
-    Scale shape — the same class-collapse + rarity-blocking spine as
-    ``jaccard_pairs_for_docs``: identical token sets collapse to one
-    class, so the pairwise stage runs at class cardinality; a class
+    Scale shape — the class-collapse + rarity-blocking spine shared
+    with ``jaccard_pairs_for_docs`` (``_token_classes``): identical
+    token sets collapse to one class, so the pairwise stage runs at
+    class cardinality; a class
     pair (a ⊊ b) is only generated where b contains a's single
     RAREST token (containment prefix length at tau=1.0 is
     n - ceil(n) + 1 = 1 — the Bayardo prefix theorem specialized to
@@ -361,46 +377,9 @@ def _superset_containment(
     docs = spread_scan(
         load(spark, sf_dir, "documents"), sf_dir, "documents", by="doc_id"
     )
-    toks = (
-        docs.select(
-            "doc_id",
-            F.array_sort(
-                F.array_distinct(F.filter(tokens("text"), lambda t: t != ""))
-            ).alias("ts"),
-        )
-        .withColumn("n", F.size("ts"))
-        .filter(F.col("n") > 0)
-        .withColumn("cls", F.md5(F.concat_ws("\x1f", "ts")))
+    member, classes, dfreq, vocab, salts = _token_classes(
+        docs, F.count(F.lit(1)).alias("sz")
     )
-    classes = toks.groupBy("cls").agg(
-        F.min_by("ts", "doc_id").alias("ts"),
-        F.min("n").alias("n"),
-        F.count(F.lit(1)).alias("sz"),
-    )
-
-    ex0 = classes.select("cls", F.explode("ts").alias("token"))
-    # membership and the vocabulary df table are independent eager
-    # materializations (guide §2.6, operators/par.py) — overlapped.
-    # dfreq is checkpointed because it has three consumers (the
-    # mask-bit projection, the rarest-token broadcast, and the
-    # scalar agg below) that each re-ran the tokenize+explode+groupBy
-    # lineage before.
-    from global_superstore_data_warehouse_spark.operators.par import (
-        build_concurrently,
-    )
-
-    member, dfreq = build_concurrently(
-        lambda: toks.select("doc_id", "n", "cls").localCheckpoint(eager=True),
-        lambda: ex0.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .localCheckpoint(eager=True),
-    )
-    # one vocabulary-sized aggregate yields BOTH scalars: the mask
-    # tier (vocab) and the salt gate's hottest-block bound (max df) —
-    # same job count as the old bare count()
-    vocab, max_df = dfreq.agg(
-        F.count(F.lit(1)), F.max("df")
-    ).first()
     exact_masks = vocab <= 62 and not force_bloom
     if exact_masks:
         # dense one-bit-per-token index, df-ordered (deterministic)
@@ -430,14 +409,12 @@ def _superset_containment(
             "token", "df", _bit("sb1:").alias("bit1"), _bit("sb2:").alias("bit2")
         )
     masks = (
-        ex0.join(F.broadcast(bits), "token")
+        classes.select("cls", F.explode("ts").alias("token"))
+        .join(F.broadcast(bits), "token")
         .groupBy("cls")
         .agg(F.bit_or("bit1").alias("m1"), F.bit_or("bit2").alias("m2"))
     )
     classes = classes.join(masks, "cls").localCheckpoint(eager=True)
-    # skew gate for the rarest-token join's salt (see _salt_factor):
-    # cached-checkpoint count + the max df already read above
-    salts = _salt_factor(max_df, classes.count())
 
     ex = classes.select("cls", "n", "m1", "m2", F.explode("ts").alias("token"))
     rarest = (
@@ -455,40 +432,14 @@ def _superset_containment(
     # rarest emits ONE row per class a and b's tokens are distinct, so
     # each (a, b) pair arises at most once — no distinct needed; the
     # mask subset test runs inside the join's generated code
-    # salted block key (see SALTS): the rarest-token side replicates
-    # per salt, the token-explode side keys by pmod(xxhash64(cls));
-    # a hot token's candidate block then splits SALTS ways instead of
-    # landing on one task
-    rarest_s = cpu_repartition(
-        rarest.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(salts - 1)))
-        ),
-        "token",
-        "salt",
-    )
-    ex_s = cpu_repartition(
-        ex.withColumn(
-            "salt", F.pmod(F.xxhash64("cls"), F.lit(salts)).cast("int")
-        ),
-        "token",
-        "salt",
-    )
-    cand = (
-        rarest_s.alias("a")
-        .join(
-            ex_s.alias("b"),
-            (F.col("a.token") == F.col("b.token"))
-            & (F.col("a.salt") == F.col("b.salt"))
-            & (F.col("b.n") > F.col("a.n"))
-            & (
-                F.col("a.m1").bitwiseAND(F.col("b.m1")) == F.col("a.m1")
-            )
-            & (
-                F.col("a.m2").bitwiseAND(F.col("b.m2")) == F.col("a.m2")
-            ),
-        )
-        .select(F.col("a.cls").alias("cls_a"), F.col("b.cls").alias("cls_b"))
-    )
+    cand = _salted_block_join(
+        rarest,
+        ex,
+        salts,
+        (F.col("b.n") > F.col("a.n"))
+        & (F.col("a.m1").bitwiseAND(F.col("b.m1")) == F.col("a.m1"))
+        & (F.col("a.m2").bitwiseAND(F.col("b.m2")) == F.col("a.m2")),
+    ).select(F.col("a.cls").alias("cls_a"), F.col("b.cls").alias("cls_b"))
     if exact_masks:
         # the dense mask test was the exact subset test already
         sup = (
@@ -515,7 +466,7 @@ def _superset_containment(
             .groupBy("cls_a")
             .agg(F.sum("sz_b").alias("n_sup"))
         )
-    cls_sz = classes.select("cls", "sz").join(
+    cls_sz = classes.select("cls", "n", "sz").join(
         sup.withColumnRenamed("cls_a", "cls"), "cls", "left"
     )
     return (

@@ -10,6 +10,7 @@ tests — the gate must never change results, only strategy.
 
 from pyspark.sql import DataFrame
 
+from global_superstore_data_warehouse_spark.operators import hints
 from global_superstore_data_warehouse_spark.operators.hints import maybe_broadcast
 
 
@@ -26,31 +27,34 @@ def _join_plan(spark, gated_small: DataFrame) -> str:
     return _physical(big.join(gated_small, "k"))
 
 
-def test_small_frame_gets_broadcast_hint(spark):
+def test_small_frame_gets_broadcast_hint(spark, monkeypatch):
+    monkeypatch.setattr(hints, "BROADCAST_MAX_ROWS", 100)
     small = spark.range(0, 10).withColumnRenamed("id", "k")
-    plan = _join_plan(spark, maybe_broadcast(small, max_rows=100))
+    plan = _join_plan(spark, maybe_broadcast(small))
     assert "BroadcastHashJoin" in plan
 
 
-def test_large_frame_drops_the_hint(spark):
+def test_large_frame_drops_the_hint(spark, monkeypatch):
     # gate of 0 rows: nothing qualifies — with auto-broadcast off the
     # plan must fall back to a shuffle join, proving no hint leaked
+    monkeypatch.setattr(hints, "BROADCAST_MAX_ROWS", 0)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         small = spark.range(0, 10).withColumnRenamed("id", "k")
-        plan = _join_plan(spark, maybe_broadcast(small, max_rows=0))
+        plan = _join_plan(spark, maybe_broadcast(small))
         assert "BroadcastHashJoin" not in plan
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_known_rows_skips_the_count(spark):
+def test_known_rows_skips_the_count(spark, monkeypatch):
     # n_rows is trusted verbatim — a frame whose real size exceeds
     # the gate still gets the hint when the caller vouches for it
+    monkeypatch.setattr(hints, "BROADCAST_MAX_ROWS", 10)
     small = spark.range(0, 50).withColumnRenamed("id", "k")
-    plan = _join_plan(spark, maybe_broadcast(small, max_rows=10, n_rows=5))
+    plan = _join_plan(spark, maybe_broadcast(small, n_rows=5))
     assert "BroadcastHashJoin" in plan
 
 
@@ -59,7 +63,6 @@ def test_gated_plans_identical_results_in_shuffle_mode(spark, monkeypatch):
     strategy: with the global gate forced to 0 rows (every hint
     dropped — the billions-of-nodes posture), dedup_clusters and
     copurchase_triangles produce byte-identical output."""
-    from global_superstore_data_warehouse_spark.operators import hints
     from global_superstore_data_warehouse_spark.plans.linkrank import (
         copurchase_triangles,
     )
@@ -83,7 +86,6 @@ def test_stats_gated_views_identical_results_in_shuffle_mode(spark, monkeypatch)
     output with the gate forced to 0 rows — the 100 TB posture where
     orders exceeds any broadcastable size and the same code runs the
     shuffle join."""
-    from global_superstore_data_warehouse_spark.operators import hints
     from global_superstore_data_warehouse_spark.plans.views import (
         demand_category_region,
         yearly_sales_profit,
@@ -104,7 +106,6 @@ def test_stats_gated_drops_hint_above_gate(spark, monkeypatch):
     demand_category_region compiles WITHOUT a broadcast on the
     orders side (the lineitem<->orders stage becomes a shuffle
     join)."""
-    from global_superstore_data_warehouse_spark.operators import hints
     from global_superstore_data_warehouse_spark.plans.views import (
         demand_category_region,
     )
@@ -190,7 +191,6 @@ def test_spread_scan_noop_past_the_gate(spark, sf_dir, monkeypatch):
     the scan untouched — plan byte-identical, no extra exchange."""
     from global_superstore_data_warehouse_spark import catalog
     from global_superstore_data_warehouse_spark.catalog import load
-    from global_superstore_data_warehouse_spark.operators import hints
 
     monkeypatch.setattr(catalog, "table_bytes", lambda d, n: 10**15)
     df = hints.spread_scan(
@@ -208,7 +208,6 @@ def test_spread_scan_reads_size_string_conf(spark, sf_dir, monkeypatch):
 
     from global_superstore_data_warehouse_spark import catalog
     from global_superstore_data_warehouse_spark.catalog import load
-    from global_superstore_data_warehouse_spark.operators import hints
 
     key = "spark.sql.files.maxPartitionBytes"
     docs = load(spark, sf_dir, "documents")

@@ -120,33 +120,58 @@ def test_salt_factor_gate_logic():
     assert _salt_factor(1, 100_000) == 1         # unskewed vocabulary
 
 
-def test_unskewed_corpus_disables_salting_same_output(spark):
-    """On a synthetic UNSKEWED vocabulary (every doc a distinct
-    token set, no token in >1/SALTS of classes) the salt gate must
-    return 1 — no build-side replication in the plan — while the
-    join still finds exactly the brute-force pair set."""
-    from global_superstore_data_warehouse_spark.plans.setsim import (
-        SALTS,
-        TAU,
-        jaccard_pairs_for_docs,
-    )
+def _unskewed_corpus() -> list[str]:
+    """120 docs in 40 groups over a wide vocabulary: docs 3g and 3g+1
+    hold the same 20-token set (in different orders), doc 3g+2 adds
+    one token (Jaccard 20/21 >= TAU with both, and a proper superset
+    of both). 80 classes; a group's 20 base tokens sit in its two
+    classes, so max df is 2 and 2 * SALTS < 80 classes."""
+    texts = []
+    for g in range(40):
+        base = [f"g{g}t{j}" for j in range(20)]
+        texts += [" ".join(base), " ".join(reversed(base)), " ".join(base + [f"g{g}x"])]
+    return texts
 
-    # 60 docs over a wide vocabulary: doc i holds tokens
-    # {w{i}a..w{i}t} (20 tokens), and docs 2k/2k+1 share all 20
-    # (Jaccard 1.0 pairs exist); every token's df is <= 1 class...
-    # two docs with IDENTICAL sets collapse to one class, so df = 1
-    # for every token — maximally unskewed.
-    rows = []
-    for i in range(60):
-        base = i // 2  # pairs share a set
-        toks = " ".join(f"w{base}t{j}" for j in range(20))
-        rows.append((i, toks))
-    docs = spark.createDataFrame(rows, "doc_id: long, text: string")
 
-    out = jaccard_pairs_for_docs(docs)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # replication gone: no explode over a SALTS-long sequence
-    assert f"sequence(0, {SALTS - 1}" not in plan
-    got = {(r["doc_a"], r["doc_b"]) for r in out.collect()}
-    want = {(2 * k, 2 * k + 1) for k in range(30)}
-    assert got == want
+@pytest.mark.parametrize("plan", ["jaccard_prefix_pairs", "superset_containment"])
+def test_unskewed_corpus_disables_salting_same_output(spark, tmp_path, monkeypatch, plan):
+    """On an UNSKEWED vocabulary (no token in a 1/SALTS share of the
+    classes) the salt gate must return 1 — the un-replicated join —
+    while the plan still reproduces a brute-force reference. The
+    decision is read off ``_salt_factor`` itself: Catalyst folds the
+    literal salt sequence into an array constant, so plan text cannot
+    show which way the gate went."""
+    from global_superstore_data_warehouse_spark.plans import setsim
+
+    gate = setsim._salt_factor
+    decisions = []
+
+    def recording_gate(max_df, n_classes):
+        decisions.append((max_df, n_classes, gate(max_df, n_classes)))
+        return decisions[-1][2]
+
+    monkeypatch.setattr(setsim, "_salt_factor", recording_gate)
+    texts = _unskewed_corpus()
+    spark.createDataFrame(
+        [(i, t, "en", "src", len(t)) for i, t in enumerate(texts)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
+
+    got = sorted(map(tuple, getattr(setsim, plan)(spark, str(tmp_path)).collect()))
+    assert decisions == [(2, 80, 1)]
+
+    sets = [frozenset(t.split()) for t in texts]
+    if plan == "jaccard_prefix_pairs":
+        want = []
+        for i, a in enumerate(sets):
+            for j in range(i + 1, len(sets)):
+                shared, union = len(a & sets[j]), len(a | sets[j])
+                if shared / union >= setsim.TAU:
+                    want.append((i, j, shared, round(shared / union, 6)))
+        assert len(want) == 3 * 40
+    else:
+        want = [
+            (i, len(s), sum(t == s for t in sets) - 1, sum(t > s for t in sets))
+            for i, s in enumerate(sets)
+        ]
+    assert got == sorted(want)
